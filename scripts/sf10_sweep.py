@@ -144,33 +144,45 @@ def _wait_quiet(gate: float = 2.0, retries: int = 10, sleep_s: float = 30.0) -> 
         time.sleep(sleep_s)
 
 
+def _adj_floor() -> float:
+    return float(os.environ.get("SPARK_GRAFT_SWEEP_ADJ_FLOOR", "10"))
+
+
 def _adjudicate(results: dict, watchdog: float) -> dict:
     """Self-adjudication pass (r14 verdict ask #1): the shared session's
     per-entry column is load-trailed exactly where it matters — marquee
     queries' persists + back-to-back 32-task stages pressure their
     successors.  Re-time every ok entry at/above the floor in a FRESH
     subprocess session (quiet-gated, requiet methodology: cold run +
-    min-of-2 warm) and record all three readings."""
+    min-of-2 warm) and record all three readings.  An adjudicator that
+    outlives its cold + two warm runs at the watchdog each (plus session
+    start-up) is killed and recorded as ``WATCHDOG``."""
     import subprocess
 
-    adj_floor = float(os.environ.get("SPARK_GRAFT_SWEEP_ADJ_FLOOR", "10"))
+    adj_floor = _adj_floor()
+    timeout_s = 3 * watchdog + 120
     suspects = sorted(
         n for n, r in results.items() if r["status"] == "ok" and r["sec"] >= adj_floor
     )
     adjudicated: dict[str, dict] = {}
     for name in suspects:
         _wait_quiet()
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--only", name, str(watchdog)],
-            capture_output=True,
-            text=True,
-            cwd=REPO_ROOT,
-        )
-        line = (proc.stdout.strip().splitlines() or ["{}"])[-1]
         try:
-            fresh = json.loads(line)
-        except ValueError:
-            fresh = {"status": "ERROR", "sec": None, "err": f"adjudicator died: {line[:200]}"}
+            proc = subprocess.run(
+                [sys.executable, os.path.abspath(__file__), "--only", name, str(watchdog)],
+                capture_output=True,
+                text=True,
+                cwd=REPO_ROOT,
+                timeout=timeout_s,
+            )
+        except subprocess.TimeoutExpired:
+            fresh = {"status": "WATCHDOG", "sec": None, "err": f"adjudicator killed after {timeout_s}s"}
+        else:
+            line = (proc.stdout.strip().splitlines() or ["{}"])[-1]
+            try:
+                fresh = json.loads(line)
+            except ValueError:
+                fresh = {"status": "ERROR", "sec": None, "err": f"adjudicator died: {line[:200]}"}
         results[name]["sec_fresh"] = fresh.get("sec")
         results[name]["sec_fresh_cold"] = fresh.get("sec_cold")
         results[name]["fresh_status"] = fresh.get("status")
@@ -198,9 +210,7 @@ def main() -> None:
         path = args[1]
         summary = json.load(open(path))
         summary["adjudicated"] = _adjudicate(summary["results"], summary["watchdog_sec"])
-        summary["adjudicate_floor_sec"] = float(
-            os.environ.get("SPARK_GRAFT_SWEEP_ADJ_FLOOR", "10")
-        )
+        summary["adjudicate_floor_sec"] = _adj_floor()
         with open(path, "w") as f:
             json.dump(summary, f, indent=1)
         print(json.dumps({"adjudicated": len(summary["adjudicated"])}))
@@ -247,7 +257,7 @@ def main() -> None:
         "flagged": {
             n: r for n, r in results.items() if r["status"] in ("WATCHDOG", "ERROR")
         },
-        "adjudicate_floor_sec": adj_floor,
+        "adjudicate_floor_sec": _adj_floor(),
         "adjudicated": adjudicated,
         "results": results,
         "loadavg": [round(x, 2) for x in os.getloadavg()],

@@ -4,15 +4,19 @@ The reference delegates these to delta-plus (README.md:88-99 ``idCols``,
 ``syncType=binlog``); they are the D3/D4 operators of SURVEY.md §2.B and
 the heart of "binlog -> queryable table".
 
-Scale notes (100 TB):
+Scale notes:
 - ``latest_image`` is one shuffle on the primary key (window w/
-  partitionBy); with AQE on, skewed keys are split automatically.  At
-  1000 executors this is the same plan Delta/Iceberg MERGE uses for its
-  dedup stage.
-- ``cdc_apply`` broadcasts the (small) latest-image side when it fits
-  (changed keys per micro-batch << base table); the base table is
-  scanned once, no shuffle on the base side for the anti-join when the
-  changes side is broadcast.
+  partitionBy); with AQE on, skewed keys are split automatically.
+- ``cdc_apply`` is one aggregate over ``base ∪ changes`` on the primary
+  key: the base is scanned once and shuffled once.  A copy-on-write
+  sink rewrites the whole base every batch anyway, and at micro-batch
+  sizes the cost is set by Spark jobs per call (planning and
+  scheduling), not by bytes: this plan runs as one shuffle stage plus
+  the consumer's stage.  Measured on the sf0.1 fixture and the 30k-row
+  streaming benchmark; sf1/sf10 are unmeasured (those fixtures are not
+  generated by default).  A base far larger than each batch's changes
+  is the merge-on-read sink's case (streaming/mor.py), which never
+  shuffles the base.
 """
 
 from __future__ import annotations
@@ -53,8 +57,6 @@ def cdc_apply(
     change_key_col: str = "pk",
     op_col: str = "op",
     set_cols: dict[str, str] | None = None,
-    broadcast_changes: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """D4 — apply a change stream onto a base snapshot (upsert + delete).
 
@@ -67,65 +69,39 @@ def cdc_apply(
 
     ``set_cols`` maps base-column -> changes-column for the payload the
     stream overwrites; unset base columns are carried from the snapshot
-    (or take the change side's value via coalesce for brand-new keys).
+    (NULL for brand-new keys).  ``key_col`` is the base's primary key:
+    unique and non-null.
+
+    Plan: ONE aggregate over ``base ∪ changes`` keyed on the primary
+    key — the key's base row and its highest-offset change (``max``
+    over a struct led by the offset) — so the base is scanned once and
+    shuffled once, with no window, join, broadcast or cache (see the
+    module's scale notes).
     """
     set_cols = set_cols or {}
-    latest = latest_image(changes, [change_key_col])
-    if materialize:
-        # latest is referenced THREE times below (merge join, key probe,
-        # insert anti-join); without materialization Catalyst replays the
-        # entire upstream changes pipeline — including its window
-        # shuffle — once per reference.  The latest-image set is small
-        # (<= one row per changed key per batch), so cache it.
-        from pyspark.storagelevel import StorageLevel
-
-        latest = latest.persist(StorageLevel.MEMORY_AND_DISK)
-    maybe_bc = F.broadcast if broadcast_changes else (lambda df: df)
-
-    # Pass 1 — ONE full scan of base, LEFT JOIN broadcast(latest): Spark
-    # builds the hash table on the small right side (BuildRight is the
-    # only broadcastable shape for a left outer join), the base side
-    # streams with zero shuffle.  Matched+deleted rows drop, matched
-    # rows take the change payload, unmatched pass through.
-    b, c = base.alias("b"), maybe_bc(latest).alias("c")
-    ck = F.col(f"c.{change_key_col}")
-    joined = b.join(c, F.col(f"b.{key_col}") == ck, "left")
-    kept = joined.filter(ck.isNull() | (F.col(f"c.{op_col}") != "delete"))
+    change_fields = list(dict.fromkeys(["cdc_offset", op_col, *set_cols.values()]))
+    keyed = base.select(
+        F.col(key_col).alias("__k"), F.struct(*base.columns).alias("__b")
+    ).unionByName(
+        changes.select(F.col(change_key_col).alias("__k"), F.struct(*change_fields).alias("__c")),
+        allowMissingColumns=True,
+    )
+    per_key = keyed.groupBy("__k").agg(
+        F.first("__b", ignorenulls=True).alias("__b"),  # at most one base row
+        F.max("__c").alias("__c"),  # struct order = offset order: the latest change
+    )
+    b, c = F.col("__b"), F.col("__c")
     out_cols = []
-    for col in base.columns:
-        if col in set_cols:
+    for f in base.schema.fields:
+        if f.name == key_col:
+            out_cols.append(F.col("__k").cast(f.dataType).alias(f.name))
+        elif f.name in set_cols:
             out_cols.append(
-                F.when(ck.isNotNull(), F.col(f"c.{set_cols[col]}"))
-                .otherwise(F.col(f"b.{col}"))
-                .alias(col)
+                F.when(c.isNotNull(), c[set_cols[f.name]]).otherwise(b[f.name]).alias(f.name)
             )
         else:
-            out_cols.append(F.col(f"b.{col}").alias(col))
-    merged = kept.select(*out_cols)
-
-    # Pass 2 — brand-new keys (in changes, absent from base).  Detect
-    # them with a key-column-pruned base scan INNER JOIN broadcast(change
-    # keys) -> matched_keys (small), then a small-vs-small anti join.
-    # The base table is never shuffled in either pass.
-    change_keys = latest.select(F.col(change_key_col).alias("__ck"))
-    matched_keys = (
-        base.select(F.col(key_col).alias("__bk"))
-        .join(maybe_bc(change_keys), F.col("__bk") == F.col("__ck"), "inner")
-        .select("__ck")
-    )
-    inserts = latest.filter(F.col(op_col) != "delete").join(
-        maybe_bc(matched_keys), F.col(change_key_col) == F.col("__ck"), "left_anti"
-    )
-    base_types = dict(base.dtypes)
-    ins_cols = []
-    for col in base.columns:
-        if col == key_col:
-            ins_cols.append(F.col(change_key_col).cast(base_types[col]).alias(col))
-        elif col in set_cols:
-            ins_cols.append(F.col(set_cols[col]).alias(col))
-        else:
-            ins_cols.append(F.lit(None).cast(base_types[col]).alias(col))
-    return merged.unionByName(inserts.select(*ins_cols))
+            out_cols.append(b[f.name].alias(f.name))
+    return per_key.filter(c.isNull() | (c[op_col] != "delete")).select(*out_cols)
 
 
 def scd2_history(

@@ -168,10 +168,11 @@ class MergeOnReadSink:
         winner = winner.persist(StorageLevel.MEMORY_AND_DISK)  # 3 consumers below
         upserts_src = winner.filter(F.col(self.op_col) != "delete")
         # broadcasting the PRESERVED side of an outer join is
-        # unsupported (would silently shuffle the base) — so, as in
-        # cdc_apply: anti-join for untouched, inner for matched, pruned
-        # key probe + small anti-join for the brand-new keys.  The base
-        # is scanned twice (once key-pruned), shuffled never.
+        # unsupported (would silently shuffle the base) — so: anti-join
+        # for untouched, inner for matched, pruned key probe + small
+        # anti-join for the brand-new keys.  The base is scanned twice
+        # (once key-pruned), shuffled never — unlike cdc_apply, which
+        # shuffles it once; here reads must stay O(deltas).
         touched_keys = winner.select(F.col(self.change_key_col).alias("__k"))
         untouched = base.join(
             F.broadcast(touched_keys), base[self.key_col] == F.col("__k"), "left_anti"

@@ -26,6 +26,7 @@ from pyspark.sql.types import (
 from spark_binlog_spark.envelope import envelope_schema, flatten_rows
 from spark_binlog_spark.operators import cdc_apply
 from spark_binlog_spark.sources.binlog_fixture import register
+from spark_binlog_spark.streaming.swap import recover_dir, safe_swap
 
 STREAM_ROW_SCHEMA = StructType(
     [
@@ -153,13 +154,22 @@ class ParquetUpsertSink:
     materialized state (the delta-plus idCols/syncType=binlog contract,
     README.md:88-99).
 
+    Per batch: ``persist`` + ``count`` of the micro-batch (the stateful
+    upstream runs once, and a no-data batch leaves the state alone),
+    then ``cdc_apply`` — one shuffle of state ∪ batch — written to a
+    tmp dir and swapped in with ``safe_swap``.  A warm trigger is three
+    Spark jobs: the count, the shuffle stage and the write.
+
     Exactly-once story: foreachBatch is at-least-once under hard crashes
     (a batch can complete its writes but die before the checkpoint
     commit, then replay).  That is safe here because ``cdc_apply`` is
     IDEMPOTENT — re-merging a batch into state that already reflects it
     upserts identical values and re-deletes absent keys, a fixpoint.
     This is the same argument the reference makes with its monotonic
-    offset guard (O6) over the at-least-once WAL."""
+    offset guard (O6) over the at-least-once WAL.  The swap keeps a
+    complete copy of the state on disk at every instant, and
+    ``recover_dir`` in ``__init__`` repairs a crash at any step of it,
+    so ``resume=True`` never re-bootstraps over applied batches."""
 
     def __init__(self, spark: SparkSession, state_dir: str, base: DataFrame, key_col: str,
                  set_cols: dict[str, str], resume: bool = False):
@@ -172,9 +182,7 @@ class ParquetUpsertSink:
         # resume=True: keep the existing materialized state (crash
         # recovery — the stream restarts from its checkpoint and this
         # sink must restart from ITS matching state, not re-bootstrap)
-        import os
-
-        if not (resume and os.path.isdir(state_dir)):
+        if not (recover_dir(state_dir) and resume):
             base.write.mode("overwrite").parquet(state_dir)
 
     @property
@@ -186,25 +194,23 @@ class ParquetUpsertSink:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()
-        n = batch_df.count()
-        if n == 0:
+        try:
+            n = batch_df.count()
+            if n == 0:
+                return
+            merged = cdc_apply(
+                self.current(),
+                batch_df,
+                key_col=self.key_col,
+                set_cols=self.set_cols,
+            )
+            # two-phase write: materialize to a tmp dir, then swap, so the
+            # read of the current state never races the overwrite
+            tmp = self.state_dir + f".b{batch_id}"
+            merged.write.mode("overwrite").parquet(tmp)
+            safe_swap(self.state_dir, tmp)
+        finally:
             batch_df.unpersist()
-            return
-        merged = cdc_apply(
-            self.current(),
-            batch_df,
-            key_col=self.key_col,
-            set_cols=self.set_cols,
-        )
-        # two-phase write: materialize to a tmp dir, then swap, so the
-        # read of the current state never races the overwrite
-        tmp = self.state_dir + f".b{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        shutil.rmtree(self.state_dir)
-        shutil.move(tmp, self.state_dir)
-        batch_df.unpersist()
         self.applied_batches.append((batch_id, n))
 
 

@@ -43,20 +43,20 @@ class TestPushdown:
 
 
 class TestJoinStrategy:
-    def test_cdc_apply_broadcasts_never_smj(self, spark):
+    def test_cdc_apply_one_key_shuffle_no_join_no_cache(self, spark):
+        """cdc_apply is one aggregate over base ∪ changes: a single
+        exchange on the key, no join of any kind, nothing cached."""
         base = load_table(spark, SF_TEST, "customer")
         ch = changes_df(spark, SF_TEST)
         plan = _physical(cdc_apply(base, ch, key_col="c_custkey", set_cols={"c_acctbal": "value"}))
-        assert plan.count("BroadcastHashJoin") >= 3
-        assert "SortMergeJoin" not in plan  # base table is never shuffled for a join
-        assert "InMemoryTableScan" in plan  # latest-image materialized once
+        assert plan.count("Exchange hashpartitioning") == 1
+        assert plan.count("Exchange hashpartitioning(__k#") == 1  # on the primary key
+        assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
+        assert "InMemoryTableScan" not in plan
 
     def test_latest_image_single_shuffle(self, spark):
         from spark_binlog_spark.operators import latest_image
 
-        # other tests persist an identical latest-image subtree; cached
-        # substitution would hide the Exchange this test counts
-        spark.catalog.clearCache()
         ch = changes_df(spark, SF_TEST)
         plan = _physical(latest_image(ch, ["pk"]))
         # one exchange for the window partitioning, nothing else
