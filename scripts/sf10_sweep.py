@@ -114,23 +114,22 @@ def _only_mode(name: str, watchdog: float) -> None:
     as ``sec_cold`` — it pays fixture builds, Python-worker spawn and
     codegen warmup), then min of two warm timed runs (``sec``, the
     citable steady-state number; a clean min-of-2 cannot read below the
-    query's true cost).  Prints one JSON line on stdout."""
+    query's true cost).  Every run is under the watchdog; the first run
+    that is not ``ok`` ends the series and sets the status.  Prints one
+    JSON line on stdout."""
     spark = _make_session()
     from spark_binlog_spark import registry
 
     fn = registry.queries()[name]
-    r = _run_one(spark, name, fn, watchdog)  # cold, under the watchdog
-    out = {"name": name, "status": r["status"], "sec_cold": r["sec"], "err": r["err"]}
-    if r["status"] == "ok":
-        warm = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            warm.append(round(time.perf_counter() - t0, 1))
-        out["sec"] = min(warm)
+    r = _run_one(spark, name, fn, watchdog)
+    out = {"name": name, "sec_cold": r["sec"]}
+    warm = []
+    while r["status"] == "ok" and len(warm) < 2:
+        r = _run_one(spark, name, fn, watchdog)
+        warm.append(r["sec"])
+    out.update(status=r["status"], err=r["err"], sec=min(warm) if r["status"] == "ok" else None)
+    if warm:
         out["warm_runs"] = warm
-    else:
-        out["sec"] = None
     print(json.dumps(out))
     spark.stop()
 

@@ -48,12 +48,15 @@ def compact_routed_table(
     """Rewrite a routed (partitionBy'd) dataset with healthy file counts.
 
     Content-preserving: read, coalesce per partition via repartition on
-    the partition columns, overwrite in place (two-phase via _tmp)."""
+    the partition columns, write to ``<out_dir>.compact`` and swap it in
+    with ``safe_swap``, so a crash at any step leaves a complete copy
+    that ``recover_dir`` restores (it runs first, for an earlier crash)."""
+    from spark_binlog_spark.streaming.swap import recover_dir, safe_swap
+
+    out_dir = out_dir.rstrip("/")
+    recover_dir(out_dir)
     df = spark.read.parquet(out_dir)
     compacted = df.repartition(target_files_per_partition, F.col(db_col), F.col(table_col))
-    tmp = out_dir.rstrip("/") + "__compact_tmp"
+    tmp = out_dir + ".compact"
     compacted.write.partitionBy(db_col, table_col).mode("overwrite").parquet(tmp)
-    import shutil
-
-    shutil.rmtree(out_dir)
-    shutil.move(tmp, out_dir)
+    safe_swap(out_dir, tmp)

@@ -1012,7 +1012,8 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import os
 
-    from spark_binlog_spark.streaming.scd2_sink import run_scd2_ingest
+    from spark_binlog_spark.streaming.runner import run_files
+    from spark_binlog_spark.streaming.scd2_sink import Scd2HistorySink
 
     _pin(spark)
     ch = changes_df(spark, sf_dir).select("pk", "value", "cdc_offset", "op")
@@ -1033,12 +1034,12 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.replace(part, dst)
         # Spark's file stream orders candidates by mtime — pin ascending
         os.utime(dst, (1_000_000_000 + i * 100, 1_000_000_000 + i * 100))
-    sink = run_scd2_ingest(
+    sink = run_files(
         spark,
         batches,
-        os.path.join(d, "store"),
+        "pk long, value double, cdc_offset long, op string",
         os.path.join(d, "ck"),
-        schema="pk long, value double, cdc_offset long, op string",
+        Scd2HistorySink(spark, os.path.join(d, "store")),
     )
     return sink.history()
 
@@ -1160,6 +1161,7 @@ def q_stream_mv_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from spark_binlog_spark.streaming.mv import IncrementalAggSink
     from spark_binlog_spark.streaming.pipeline import parse_stream, read_stream
+    from spark_binlog_spark.streaming.runner import run_foreach_batch
 
     _pin(spark)
     base = load_table(spark, sf_dir, "customer")
@@ -1178,14 +1180,7 @@ def q_stream_mv_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{sf_dir}/events.parquet",
         numPartitions=_source_partitions(spark, f"{sf_dir}/events.parquet"),
     )
-    q = (
-        parse_stream(wire)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{tmp}/ck")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(parse_stream(wire), sink, f"{tmp}/ck")
     return sink.current_agg().select(
         "c_mktsegment",
         F.col("n_rows").alias("n_customers"),
@@ -2115,18 +2110,14 @@ def _drain_aggregated(spark: SparkSession, df: DataFrame, agg_fn, schema: str) -
     With foreachBatch the corpus-sized relation never leaves the
     executors; only group-count-bounded partials cross to the driver
     (the same additive-partial contract every ingest sink here uses)."""
+    from spark_binlog_spark.streaming.runner import run_foreach_batch
+
     rows: list = []
 
     def sink(batch_df: DataFrame, _batch_id: int) -> None:
         rows.extend(agg_fn(batch_df).collect())
 
-    q = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", _tmpdir("stream_ck_") + "/ck")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(df, sink, _tmpdir("stream_ck_") + "/ck")
     return spark.createDataFrame(rows, schema)
 
 

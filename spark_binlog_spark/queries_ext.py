@@ -1205,13 +1205,15 @@ def q_stream_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shot batch BM25 oracle exactly."""
     import os
 
-    from spark_binlog_spark.streaming.inverted_index import run_inverted_index
+    from spark_binlog_spark.streaming.inverted_index import InvertedIndexSink
+    from spark_binlog_spark.streaming.runner import run_files
 
     docs_dir = _parity_batches(sf_dir, "invidx_ingest_")
     d = os.path.dirname(docs_dir)
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_inverted_index(
-        spark, docs_dir, os.path.join(d, "store"), os.path.join(d, "ck"), schema
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        InvertedIndexSink(spark, os.path.join(d, "store")),
     )
     return sink.bm25(BM25_QUERIES, k=5)
 
@@ -1302,24 +1304,26 @@ def q_stream_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     by streams and read by the query."""
     import os
 
-    from spark_binlog_spark.streaming.embedding_sink import (
-        run_embedding_neardup_ingest,
-    )
-    from spark_binlog_spark.streaming.inverted_index import run_inverted_index
+    from spark_binlog_spark.streaming.embedding_sink import EmbeddingNearDupIngestSink
+    from spark_binlog_spark.streaming.inverted_index import InvertedIndexSink
+    from spark_binlog_spark.streaming.runner import run_files
     from pyspark.sql import Window
 
     docs_dir = _parity_batches(sf_dir, "hybinvidx_ingest_")
     d1 = os.path.dirname(docs_dir)
     dschema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sparse = run_inverted_index(
-        spark, docs_dir, os.path.join(d1, "store"), os.path.join(d1, "ck"), dschema
+    sparse = run_files(
+        spark, docs_dir, dschema, os.path.join(d1, "ck"),
+        InvertedIndexSink(spark, os.path.join(d1, "store")),
     )
     vecs_dir = _parity_batches(sf_dir, "hybemb_ingest_", "embeddings", "vec_id")
     d2 = os.path.dirname(vecs_dir)
     eschema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    dense = run_embedding_neardup_ingest(
-        spark, vecs_dir, os.path.join(d2, "store"), os.path.join(d2, "ck"), eschema,
-        min_cosine4=5000, planes=4, n_tables=2,
+    dense = run_files(
+        spark, vecs_dir, eschema, os.path.join(d2, "ck"),
+        EmbeddingNearDupIngestSink(
+            spark, os.path.join(d2, "store"), min_cosine4=5000, planes=4, n_tables=2
+        ),
     )
     queries = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
         F.col("vec_id") < 3
@@ -1530,13 +1534,15 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint, earlier batch wins)."""
     import os
 
-    from spark_binlog_spark.streaming.dedup_sink import run_dedup_ingest
+    from spark_binlog_spark.streaming.dedup_sink import DedupIngestSink
+    from spark_binlog_spark.streaming.runner import run_files
 
     docs_dir = _parity_batches(sf_dir, "dedup_ingest_")
     d = os.path.dirname(docs_dir)
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_dedup_ingest(
-        spark, docs_dir, os.path.join(d, "store"), os.path.join(d, "ck"), schema
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        DedupIngestSink(spark, os.path.join(d, "store")),
     )
     return sink.accepted().select("doc_id", "fp_md5")
 
@@ -1573,15 +1579,16 @@ def q_stream_neardup_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc or any smaller-id doc in their own batch."""
     import os
 
-    from spark_binlog_spark.streaming.neardup_sink import run_neardup_ingest
+    from spark_binlog_spark.streaming.neardup_sink import NearDupIngestSink
+    from spark_binlog_spark.streaming.runner import run_files
 
     docs_dir = _parity_batches(sf_dir, "neardup_ingest_")
     d = os.path.dirname(docs_dir)
 
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_neardup_ingest(
-        spark, docs_dir, os.path.join(d, "store"), os.path.join(d, "ck"), schema,
-        min_agree=2,
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        NearDupIngestSink(spark, os.path.join(d, "store"), min_agree=2),
     )
     return sink.accepted()
 
@@ -1631,16 +1638,17 @@ def q_stream_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     admitted vec_id set must equal the batch-sequential recompute."""
     import os
 
-    from spark_binlog_spark.streaming.embedding_sink import (
-        run_embedding_neardup_ingest,
-    )
+    from spark_binlog_spark.streaming.embedding_sink import EmbeddingNearDupIngestSink
+    from spark_binlog_spark.streaming.runner import run_files
 
     vecs_dir = _parity_batches(sf_dir, "embdedup_ingest_", "embeddings", "vec_id")
     d = os.path.dirname(vecs_dir)
     schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    sink = run_embedding_neardup_ingest(
-        spark, vecs_dir, os.path.join(d, "store"), os.path.join(d, "ck"), schema,
-        min_cosine4=5000, planes=4, n_tables=2,
+    sink = run_files(
+        spark, vecs_dir, schema, os.path.join(d, "ck"),
+        EmbeddingNearDupIngestSink(
+            spark, os.path.join(d, "store"), min_cosine4=5000, planes=4, n_tables=2
+        ),
     )
     return sink.accepted()
 
@@ -1655,14 +1663,15 @@ def q_stream_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins — no banding — and must match exactly."""
     import os
 
-    from spark_binlog_spark.streaming.simhash_sink import run_simhash_ingest
+    from spark_binlog_spark.streaming.runner import run_files
+    from spark_binlog_spark.streaming.simhash_sink import SimHashIngestSink
 
     docs_dir = _parity_batches(sf_dir, "simhash_ingest_")
     d = os.path.dirname(docs_dir)
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_simhash_ingest(
-        spark, docs_dir, os.path.join(d, "store"), os.path.join(d, "ck"), schema,
-        max_hamming=2,
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        SimHashIngestSink(spark, os.path.join(d, "store"), max_hamming=2),
     )
     return sink.accepted()
 
@@ -1744,16 +1753,17 @@ def q_stream_embedding_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     no recompute, no side-channel."""
     import os
 
-    from spark_binlog_spark.streaming.embedding_sink import (
-        run_embedding_neardup_ingest,
-    )
+    from spark_binlog_spark.streaming.embedding_sink import EmbeddingNearDupIngestSink
+    from spark_binlog_spark.streaming.runner import run_files
 
     vecs_dir = _parity_batches(sf_dir, "embsearch_ingest_", "embeddings", "vec_id")
     d = os.path.dirname(vecs_dir)
     schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    sink = run_embedding_neardup_ingest(
-        spark, vecs_dir, os.path.join(d, "store"), os.path.join(d, "ck"), schema,
-        min_cosine4=5000, planes=4, n_tables=2,
+    sink = run_files(
+        spark, vecs_dir, schema, os.path.join(d, "ck"),
+        EmbeddingNearDupIngestSink(
+            spark, os.path.join(d, "store"), min_cosine4=5000, planes=4, n_tables=2
+        ),
     )
     queries = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
         F.col("vec_id") < 5
@@ -3251,14 +3261,16 @@ def q_stream_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch source_mixing_weights oracle."""
     import os
 
-    from spark_binlog_spark.streaming.corpus_stats import run_corpus_stats
+    from spark_binlog_spark.streaming.corpus_stats import CorpusStatsSink
+    from spark_binlog_spark.streaming.runner import run_files
 
     docs_dir = _parity_batches(sf_dir, "corpus_stats_")
     d = os.path.dirname(docs_dir)
 
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_corpus_stats(
-        spark, docs_dir, os.path.join(d, "stats"), os.path.join(d, "ck"), schema
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        CorpusStatsSink(spark, os.path.join(d, "stats")),
     )
     return sink.mixture()
 
@@ -3322,13 +3334,15 @@ def q_stream_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the batch histogram."""
     import os
 
-    from spark_binlog_spark.streaming.corpus_stats import run_corpus_stats
+    from spark_binlog_spark.streaming.corpus_stats import CorpusStatsSink
+    from spark_binlog_spark.streaming.runner import run_files
 
     docs_dir = _parity_batches(sf_dir, "corpus_hist_")
     d = os.path.dirname(docs_dir)
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_corpus_stats(
-        spark, docs_dir, os.path.join(d, "stats"), os.path.join(d, "ck"), schema
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        CorpusStatsSink(spark, os.path.join(d, "stats")),
     )
     return sink.length_histogram()
 
@@ -3771,13 +3785,15 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources × bins| stats table, the corpus is never re-read)."""
     import os
 
-    from spark_binlog_spark.streaming.corpus_stats import run_corpus_stats
+    from spark_binlog_spark.streaming.corpus_stats import CorpusStatsSink
+    from spark_binlog_spark.streaming.runner import run_files
 
     docs_dir = _parity_batches(sf_dir, "corpus_drift_")
     d = os.path.dirname(docs_dir)
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_corpus_stats(
-        spark, docs_dir, os.path.join(d, "stats"), os.path.join(d, "ck"), schema
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        CorpusStatsSink(spark, os.path.join(d, "stats")),
     )
     return sink.drift()
 
@@ -4342,14 +4358,16 @@ def q_stream_unimax(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/corpus_stats.py token_budget)."""
     import os
 
-    from spark_binlog_spark.streaming.corpus_stats import run_corpus_stats
+    from spark_binlog_spark.streaming.corpus_stats import CorpusStatsSink
+    from spark_binlog_spark.streaming.runner import run_files
 
     docs_dir = _parity_batches(sf_dir, "unimax_stats_")
     d = os.path.dirname(docs_dir)
 
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_corpus_stats(
-        spark, docs_dir, os.path.join(d, "stats"), os.path.join(d, "ck"), schema
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        CorpusStatsSink(spark, os.path.join(d, "stats")),
     )
     return sink.token_budget(max_epochs=2, budget_num=3, budget_den=2)
 
@@ -4406,14 +4424,16 @@ def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_dsir_importance oracle (streaming/dsir_sink.py)."""
     import os
 
-    from spark_binlog_spark.streaming.dsir_sink import run_dsir_model
+    from spark_binlog_spark.streaming.dsir_sink import DsirModelSink
+    from spark_binlog_spark.streaming.runner import run_files
 
     docs_dir = _parity_batches(sf_dir, "dsir_model_")
     d = os.path.dirname(docs_dir)
 
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_dsir_model(
-        spark, docs_dir, os.path.join(d, "stats"), os.path.join(d, "ck"), schema
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        DsirModelSink(spark, os.path.join(d, "stats")),
     )
     return sink.score(load_table(spark, sf_dir, "documents"))
 
@@ -4432,14 +4452,16 @@ def q_stream_ccnet(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/lm_sink.py)."""
     import os
 
-    from spark_binlog_spark.streaming.lm_sink import run_lm_model
+    from spark_binlog_spark.streaming.lm_sink import LmModelSink
+    from spark_binlog_spark.streaming.runner import run_files
 
     docs_dir = _parity_batches(sf_dir, "lm_model_")
     d = os.path.dirname(docs_dir)
 
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_lm_model(
-        spark, docs_dir, os.path.join(d, "stats"), os.path.join(d, "ck"), schema
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        LmModelSink(spark, os.path.join(d, "stats")),
     )
     return sink.quality_buckets(load_table(spark, sf_dir, "documents"))
 
@@ -4459,15 +4481,16 @@ def q_stream_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/kmeans_sink.py)."""
     import os
 
-    from spark_binlog_spark.streaming.kmeans_sink import run_minibatch_kmeans
+    from spark_binlog_spark.streaming.kmeans_sink import MiniBatchKmeansSink
+    from spark_binlog_spark.streaming.runner import run_files
 
     vecs_dir = _parity_batches(sf_dir, "kmeans_model_", table="embeddings", id_col="vec_id")
     d = os.path.dirname(vecs_dir)
 
     schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    sink = run_minibatch_kmeans(
-        spark, vecs_dir, os.path.join(d, "stats"), os.path.join(d, "ck"), schema,
-        n_clusters=8,
+    sink = run_files(
+        spark, vecs_dir, schema, os.path.join(d, "ck"),
+        MiniBatchKmeansSink(spark, os.path.join(d, "stats"), n_clusters=8),
     )
     return sink.model()
 
@@ -4537,7 +4560,8 @@ def q_stream_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster_balanced_sample)."""
     import os
 
-    from spark_binlog_spark.streaming.kmeans_sink import run_minibatch_kmeans
+    from spark_binlog_spark.streaming.kmeans_sink import MiniBatchKmeansSink
+    from spark_binlog_spark.streaming.runner import run_files
 
     vecs_dir = _parity_batches(
         sf_dir, "kmeans_sample_", table="embeddings", id_col="vec_id"
@@ -4545,9 +4569,9 @@ def q_stream_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = os.path.dirname(vecs_dir)
 
     schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    sink = run_minibatch_kmeans(
-        spark, vecs_dir, os.path.join(d, "stats"), os.path.join(d, "ck"), schema,
-        n_clusters=8,
+    sink = run_files(
+        spark, vecs_dir, schema, os.path.join(d, "ck"),
+        MiniBatchKmeansSink(spark, os.path.join(d, "stats"), n_clusters=8),
     )
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.cluster_balanced_sample(
@@ -4702,13 +4726,15 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from spark_binlog_spark.functions import sketch
-    from spark_binlog_spark.streaming.sketch_sink import run_cms_sketch
+    from spark_binlog_spark.streaming.runner import run_files
+    from spark_binlog_spark.streaming.sketch_sink import CmsSketchSink
 
     docs_dir = _parity_batches(sf_dir, "cms_sketch_")
     d = os.path.dirname(docs_dir)
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_cms_sketch(
-        spark, docs_dir, os.path.join(d, "stats"), os.path.join(d, "ck"), schema
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        CmsSketchSink(spark, os.path.join(d, "stats")),
     )
     docs = load_table(spark, sf_dir, "documents")
     top = (
@@ -4740,13 +4766,15 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from spark_binlog_spark.functions.text import words
-    from spark_binlog_spark.streaming.sketch_sink import run_hll_sketch
+    from spark_binlog_spark.streaming.runner import run_files
+    from spark_binlog_spark.streaming.sketch_sink import HllSketchSink
 
     docs_dir = _parity_batches(sf_dir, "hll_sketch_")
     d = os.path.dirname(docs_dir)
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_hll_sketch(
-        spark, docs_dir, os.path.join(d, "stats"), os.path.join(d, "ck"), schema
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        HllSketchSink(spark, os.path.join(d, "stats")),
     )
     docs = load_table(spark, sf_dir, "documents")
     exact = (
@@ -4924,13 +4952,15 @@ def q_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_token_quantiles oracle (streaming/sketch_sink.py)."""
     import os
 
-    from spark_binlog_spark.streaming.sketch_sink import run_hist_sketch
+    from spark_binlog_spark.streaming.runner import run_files
+    from spark_binlog_spark.streaming.sketch_sink import HistSketchSink
 
     docs_dir = _parity_batches(sf_dir, "hist_sketch_")
     d = os.path.dirname(docs_dir)
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_hist_sketch(
-        spark, docs_dir, os.path.join(d, "stats"), os.path.join(d, "ck"), schema
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        HistSketchSink(spark, os.path.join(d, "stats")),
     )
     return _quantile_dashboard(spark, sf_dir, sink.quantiles())
 
@@ -5045,13 +5075,15 @@ def q_stream_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/sketch_sink.py)."""
     import os
 
-    from spark_binlog_spark.streaming.sketch_sink import run_kmv_sketch
+    from spark_binlog_spark.streaming.runner import run_files
+    from spark_binlog_spark.streaming.sketch_sink import KmvSketchSink
 
     docs_dir = _parity_batches(sf_dir, "kmv_sketch_")
     d = os.path.dirname(docs_dir)
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_kmv_sketch(
-        spark, docs_dir, os.path.join(d, "stats"), os.path.join(d, "ck"), schema
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        KmvSketchSink(spark, os.path.join(d, "stats")),
     )
     return _jaccard_dashboard(spark, sf_dir, sink.jaccard())
 
@@ -5109,13 +5141,15 @@ def q_stream_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_priority_sample oracle (streaming/sketch_sink.py)."""
     import os
 
-    from spark_binlog_spark.streaming.sketch_sink import run_priority_sample
+    from spark_binlog_spark.streaming.runner import run_files
+    from spark_binlog_spark.streaming.sketch_sink import PrioritySampleSink
 
     docs_dir = _parity_batches(sf_dir, "prio_sample_")
     d = os.path.dirname(docs_dir)
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_priority_sample(
-        spark, docs_dir, os.path.join(d, "stats"), os.path.join(d, "ck"), schema
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        PrioritySampleSink(spark, os.path.join(d, "stats")),
     )
     return sink.sample().orderBy("source", "priority", "doc_id")
 
@@ -5133,14 +5167,15 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_bloom_decontaminate oracle (streaming/sketch_sink.py)."""
     import os
 
-    from spark_binlog_spark.streaming.sketch_sink import run_bloom_bits
+    from spark_binlog_spark.streaming.runner import run_files
+    from spark_binlog_spark.streaming.sketch_sink import BloomBitsSink
 
     docs_dir = _parity_batches(sf_dir, "bloom_bits_")
     d = os.path.dirname(docs_dir)
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_bloom_bits(
-        spark, docs_dir, os.path.join(d, "stats"), os.path.join(d, "ck"),
-        schema, where="doc_id % 97 = 0",
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        BloomBitsSink(spark, os.path.join(d, "stats"), where="doc_id % 97 = 0"),
     )
     docs = load_table(spark, sf_dir, "documents")
     return sink.probe(docs.filter(F.col("doc_id") % 97 != 0))
@@ -5218,13 +5253,15 @@ def q_stream_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from spark_binlog_spark.functions.bpe import bpe_learn
-    from spark_binlog_spark.streaming.vocab_sink import run_word_freq
+    from spark_binlog_spark.streaming.runner import run_files
+    from spark_binlog_spark.streaming.vocab_sink import WordFreqSink
 
     docs_dir = _parity_batches(sf_dir, "wordfreq_")
     d = os.path.dirname(docs_dir)
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sink = run_word_freq(
-        spark, docs_dir, os.path.join(d, "stats"), os.path.join(d, "ck"), schema
+    sink = run_files(
+        spark, docs_dir, schema, os.path.join(d, "ck"),
+        WordFreqSink(spark, os.path.join(d, "stats")),
     )
     return bpe_learn(spark, sink.vocab())
 

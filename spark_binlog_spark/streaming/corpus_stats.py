@@ -13,27 +13,19 @@ data pipeline watches) falls out of the same additive state.  Each
 micro-batch costs ONE tiny aggregation of the batch plus a
 |sources × bins|-sized merge — the corpus is read once, at ingest,
 and never re-scanned (at 100 TB a per-batch recompute would re-read
-the world; the delta form touches only the batch).
-
-Exactly-once: foreachBatch is at-least-once under hard crashes and an
-additive merge is NOT idempotent, so the stats parquet carries the
-last applied batch_id and a replayed batch is skipped — the same
-batch-id ratchet as ``IncrementalAggSink`` (streaming/mv.py), which in
-turn mirrors the reference's monotonic offset guard
-(OriginalSourceServerInExecutor.scala:164-171).  Crash-safety of the
-swap itself comes from ``safe_swap``/``recover_dir``.
+the world; the delta form touches only the batch).  Replay and crash
+safety come from ``MergeableStore`` (streaming/store.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from spark_binlog_spark.streaming.swap import recover_dir, safe_swap
+from spark_binlog_spark.streaming.store import MergeableStore
 
 
-class CorpusStatsSink:
+class CorpusStatsSink(MergeableStore):
     """foreachBatch sink maintaining per-``by`` corpus statistics.
 
     ``current()`` -> (by, n_docs, n_tokens); ``mixture()`` additionally
@@ -42,71 +34,21 @@ class CorpusStatsSink:
     stream ingested to completion hash-matches the batch oracle.
     """
 
+    merge = "sum"
+
     def __init__(
-        self,
-        spark: SparkSession,
-        stats_dir: str,
-        by: str = "source",
-        text_col: str = "text",
-        resume: bool = True,
+        self, spark: SparkSession, stats_dir: str, by: str = "source", resume: bool = True
     ):
-        self.spark = spark
-        self.stats_dir = stats_dir
         self.by = by
-        self.text_col = text_col
-        self._schema = StructType(
-            [
-                StructField(by, StringType()),
-                StructField("len_bin", LongType()),
-                StructField("n_docs", LongType()),
-                StructField("n_tokens", LongType()),
-                StructField("batch_id", LongType()),
-            ]
-        )
-        # last-batch delta store (feeds drift()): same swap machinery,
-        # written BEFORE the totals swap each batch so a crash between
-        # the two converges on replay (totals ratchet re-applies and
-        # rewrites the identical delta)
+        self.keys = (by, "len_bin")
+        self.schema = f"`{by}` string, len_bin long, n_docs long, n_tokens long"
+        super().__init__(spark, stats_dir, resume)
+        # the last batch's delta (feeds drift()), published before the
+        # totals each batch (see _delta)
         self.delta_dir = f"{stats_dir}_last_delta"
-        self._delta_schema = StructType(
-            [
-                StructField(by, StringType()),
-                StructField("len_bin", LongType()),
-                StructField("d_docs", LongType()),
-                StructField("d_tokens", LongType()),
-                StructField("batch_id", LongType()),
-            ]
+        self._delta_schema = self._open(
+            self.delta_dir, f"`{by}` string, len_bin long, d_docs long, d_tokens long", resume
         )
-        ok = recover_dir(stats_dir)
-        dok = recover_dir(self.delta_dir)
-        if not (resume and dok):
-            self.spark.createDataFrame([], self._delta_schema).write.mode(
-                "overwrite"
-            ).parquet(self.delta_dir)
-        if not (resume and ok):
-            self.spark.createDataFrame([], self._schema).write.mode(
-                "overwrite"
-            ).parquet(stats_dir)
-        else:
-            # store-format mismatch must FAILFAST (same rule as the
-            # floorDir scalar/map check): resuming an old-schema store
-            # under the new schema would fill the missing columns with
-            # NULL join keys that never merge — silent corruption
-            actual = set(self.spark.read.parquet(stats_dir).schema.names)
-            expected = set(self._schema.names)
-            if actual != expected:
-                raise ValueError(
-                    f"stats store {stats_dir} has columns {sorted(actual)} but this "
-                    f"sink expects {sorted(expected)} — rebuild the store (its source "
-                    "stream is replayable) or resume with the matching sink version"
-                )
-
-    def _stats(self) -> DataFrame:
-        return self.spark.read.schema(self._schema).parquet(self.stats_dir)
-
-    def _last_batch_id(self) -> int:
-        row = self._stats().agg(F.max("batch_id")).collect()[0]
-        return row[0] if row[0] is not None else -1
 
     def current(self) -> DataFrame:
         # coarse per-source totals roll up EXACTLY from the bin grain
@@ -214,15 +156,11 @@ class CorpusStatsSink:
             drift4.cast("long").alias("drift4"),
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # replay guard: an already-applied batch (crash between the
-        # swap and the checkpoint commit) must not double-count
-        if batch_id <= self._last_batch_id():
-            return
+    def _delta(self, batch_df, batch_id):
         delta = (
             batch_df.select(
                 F.col(self.by),
-                F.size(F.split(F.col(self.text_col), "\\s+")).cast("long").alias("t"),
+                F.size(F.split(F.col("text"), "\\s+")).cast("long").alias("t"),
             )
             .select(
                 F.col(self.by),
@@ -239,58 +177,12 @@ class CorpusStatsSink:
         # publish the delta FIRST (drift()'s last-batch view), then the
         # totals: a crash between the swaps replays the batch (totals
         # ratchet still behind), rewriting the identical delta
-        dtmp = f"{self.delta_dir}.b{batch_id}"
-        delta.write.mode("overwrite").parquet(dtmp)
-        safe_swap(self.delta_dir, dtmp)
+        self._publish(delta, self.delta_dir, batch_id)
         # merge FROM the published delta so totals reflect exactly the
         # bytes drift() will read (and the batch agg runs once)
-        delta = self.spark.read.schema(self._delta_schema).parquet(self.delta_dir)
-        old = self._stats()
-        merged = (
-            old.join(delta, [self.by, "len_bin"], "full_outer")
-            .select(
-                F.col(self.by),
-                F.col("len_bin"),
-                (F.coalesce(F.col("n_docs"), F.lit(0)) + F.coalesce(F.col("d_docs"), F.lit(0)))
-                .cast("long")
-                .alias("n_docs"),
-                (
-                    F.coalesce(F.col("n_tokens"), F.lit(0))
-                    + F.coalesce(F.col("d_tokens"), F.lit(0))
-                )
-                .cast("long")
-                .alias("n_tokens"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            )
+        return self.spark.read.schema(self._delta_schema).parquet(self.delta_dir).select(
+            self.by,
+            "len_bin",
+            F.col("d_docs").alias("n_docs"),
+            F.col("d_tokens").alias("n_tokens"),
         )
-        tmp = f"{self.stats_dir}.b{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        safe_swap(self.stats_dir, tmp)
-
-
-def run_corpus_stats(
-    spark: SparkSession,
-    docs_dir: str,
-    stats_dir: str,
-    checkpoint_dir: str,
-    schema,
-    by: str = "source",
-    max_files_per_trigger: int = 1,
-) -> CorpusStatsSink:
-    """Stream a directory of document files (one micro-batch per file by
-    default) through the stats sink via availableNow; returns the sink
-    whose ``mixture()`` is the live rebalancing table."""
-    sink = CorpusStatsSink(spark, stats_dir, by=by)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(docs_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink

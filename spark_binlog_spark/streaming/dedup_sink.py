@@ -234,31 +234,3 @@ class DedupIngestSink:
                 remove_with_checksum(f)
             self.n_compactions += 1
         shutil.rmtree(aside, ignore_errors=True)
-
-
-def run_dedup_ingest(
-    spark: SparkSession,
-    docs_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    schema,
-    max_files_per_trigger: int = 1,
-    n_buckets: int = 16,
-) -> DedupIngestSink:
-    """Stream a directory of document files (one micro-batch per file
-    by default) through the dedup sink via availableNow; returns the
-    sink whose ``accepted()`` is the deduplicated corpus."""
-    sink = DedupIngestSink(spark, store_dir, n_buckets=n_buckets)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(docs_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink

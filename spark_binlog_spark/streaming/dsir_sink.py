@@ -5,37 +5,30 @@ DSIR's expensive piece at 100 TB is estimating the target/raw bucket
 distributions — a full-corpus gram explode.  Those distributions are
 PURELY ADDITIVE (p/q are gram-instance counts per hash bucket), so a
 continuous-ingest pipeline maintains them incrementally: each
-micro-batch contributes one tiny (≤ n_buckets rows) delta, merged into
-a store that is bounded at n_buckets rows forever.  Scoring (the cheap
-piece — one explode against a broadcast table) runs on demand against
-the CURRENT model via ``score``; the importance table itself serves
-from ``importance_table`` with zero corpus reads.
-
-Exactly-once: foreachBatch is at-least-once under hard crashes and an
-additive merge is NOT idempotent, so the store carries the last applied
-batch_id and replayed batches are skipped — the same batch-id ratchet
-as ``CorpusStatsSink``/``IncrementalAggSink``, which mirrors the
-reference's monotonic offset guard
-(OriginalSourceServerInExecutor.scala:164-171).  Crash-safety of the
-directory swap comes from ``safe_swap``/``recover_dir``.
+micro-batch contributes one tiny (≤ DSIR_BUCKETS rows) delta, merged
+into a store that is bounded at DSIR_BUCKETS rows forever.  Scoring
+(the cheap piece — one explode against a broadcast table) runs on
+demand against the CURRENT model via ``score``; the importance table
+itself serves from ``importance_table`` with zero corpus reads.  The
+target is English (``lang = 'en'``), as in the batch
+``dsir_importance``.  Replay and crash safety come from
+``MergeableStore`` (streaming/store.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from spark_binlog_spark.functions.text import (
-    DSIR_BUCKETS,
     dsir_gram_buckets,
     dsir_lr_table,
     dsir_score,
 )
-from spark_binlog_spark.streaming.swap import recover_dir, safe_swap
+from spark_binlog_spark.streaming.store import MergeableStore
 
 
-class DsirModelSink:
+class DsirModelSink(MergeableStore):
     """foreachBatch sink maintaining the DSIR bucket distributions.
 
     ``importance_table()`` -> (bucket, lr4); ``score(df)`` -> the same
@@ -43,121 +36,29 @@ class DsirModelSink:
     completion scores bit-identically to the one-shot batch estimate.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        stats_dir: str,
-        target_col: str = "lang",
-        target_value: str = "en",
-        n_buckets: int = DSIR_BUCKETS,
-        text_col: str = "text",
-        resume: bool = True,
-    ):
-        self.spark = spark
-        self.stats_dir = stats_dir
-        self.target_col = target_col
-        self.target_value = target_value
-        self.n_buckets = n_buckets
-        self.text_col = text_col
-        self._schema = StructType(
-            [
-                StructField("bucket", LongType()),
-                StructField("p", LongType()),
-                StructField("q", LongType()),
-                StructField("batch_id", LongType()),
-            ]
+    schema = "bucket long, p long, q long"
+    keys = ("bucket",)
+    merge = "sum"
+
+    def _delta(self, batch_df, batch_id):
+        return (
+            dsir_gram_buckets(batch_df)
+            .groupBy("bucket")
+            .agg(
+                F.sum(F.when(F.col("is_target"), 1).otherwise(0)).alias("p"),
+                F.sum(F.when(F.col("is_target"), 0).otherwise(1)).alias("q"),
+            )
         )
-        ok = recover_dir(stats_dir)
-        if not (resume and ok):
-            self.spark.createDataFrame([], self._schema).write.mode(
-                "overwrite"
-            ).parquet(stats_dir)
-
-    def _stats(self) -> DataFrame:
-        return self.spark.read.schema(self._schema).parquet(self.stats_dir)
-
-    def _last_batch_id(self) -> int:
-        row = self._stats().agg(F.max("batch_id")).collect()[0]
-        return row[0] if row[0] is not None else -1
 
     def distributions(self) -> DataFrame:
         return self._stats().select("bucket", "p", "q")
 
     def importance_table(self) -> DataFrame:
-        """(bucket, lr4) from the live store — ≤ n_buckets rows, zero
+        """(bucket, lr4) from the live store — ≤ DSIR_BUCKETS rows, zero
         corpus reads."""
-        return dsir_lr_table(self.distributions(), self.n_buckets)
+        return dsir_lr_table(self.distributions())
 
     def score(self, df: DataFrame) -> DataFrame:
         """Score any document relation against the CURRENT model —
         dsir_importance's exact output contract served from the store."""
-        base = dsir_gram_buckets(
-            df, self.target_col, self.target_value, self.n_buckets, self.text_col
-        )
-        return dsir_score(base, self.importance_table())
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self._last_batch_id():
-            return  # replayed batch (crash between swap and commit)
-        delta = (
-            dsir_gram_buckets(
-                batch_df,
-                self.target_col,
-                self.target_value,
-                self.n_buckets,
-                self.text_col,
-            )
-            .groupBy("bucket")
-            .agg(
-                F.sum(F.when(F.col("is_target"), 1).otherwise(0)).alias("dp"),
-                F.sum(F.when(F.col("is_target"), 0).otherwise(1)).alias("dq"),
-            )
-        )
-        merged = (
-            self._stats()
-            .join(delta, "bucket", "full_outer")
-            .select(
-                "bucket",
-                (F.coalesce(F.col("p"), F.lit(0)) + F.coalesce(F.col("dp"), F.lit(0)))
-                .cast("long")
-                .alias("p"),
-                (F.coalesce(F.col("q"), F.lit(0)) + F.coalesce(F.col("dq"), F.lit(0)))
-                .cast("long")
-                .alias("q"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            )
-        )
-        tmp = f"{self.stats_dir}.b{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        safe_swap(self.stats_dir, tmp)
-
-
-def run_dsir_model(
-    spark: SparkSession,
-    docs_dir: str,
-    stats_dir: str,
-    checkpoint_dir: str,
-    schema,
-    target_col: str = "lang",
-    target_value: str = "en",
-    max_files_per_trigger: int = 1,
-) -> DsirModelSink:
-    """Stream a directory of document files (one micro-batch per file by
-    default) through the model sink via availableNow; returns the sink
-    whose ``score``/``importance_table`` serve the live model."""
-    sink = DsirModelSink(
-        spark, stats_dir, target_col=target_col, target_value=target_value
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(docs_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink
+        return dsir_score(dsir_gram_buckets(df), self.importance_table())

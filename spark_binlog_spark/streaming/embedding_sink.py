@@ -333,42 +333,3 @@ class EmbeddingNearDupIngestSink:
                 admitted.unpersist()
         finally:
             sig.unpersist()
-
-
-def run_embedding_neardup_ingest(
-    spark: SparkSession,
-    vecs_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    schema,
-    min_cosine4: int = 8000,
-    planes: int | None = 4,
-    n_tables: int = 2,
-    max_files_per_trigger: int = 1,
-    n_buckets: int = 16,
-) -> EmbeddingNearDupIngestSink:
-    """Stream a directory of embedding files (one micro-batch per file
-    by default) through the vector near-dup admission sink via
-    availableNow; returns the sink whose ``accepted()`` is the admitted
-    vec_id set."""
-    sink = EmbeddingNearDupIngestSink(
-        spark,
-        store_dir,
-        min_cosine4=min_cosine4,
-        planes=planes,
-        n_tables=n_tables,
-        n_buckets=n_buckets,
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(vecs_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink

@@ -230,31 +230,3 @@ class InvertedIndexSink:
             )
         finally:
             slice_.unpersist()
-
-
-def run_inverted_index(
-    spark: SparkSession,
-    docs_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    schema,
-    max_files_per_trigger: int = 1,
-    n_buckets: int = 16,
-) -> InvertedIndexSink:
-    """Stream a directory of document files through the inverted-index
-    sink via availableNow; returns the sink whose ``bm25()`` serves
-    retrieval off the maintained store."""
-    sink = InvertedIndexSink(spark, store_dir, n_buckets=n_buckets)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(docs_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink

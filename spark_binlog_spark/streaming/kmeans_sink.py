@@ -17,69 +17,41 @@ Seeds: the k smallest vec_ids of the FIRST batch (TakeOrderedAndProject
 — top-k per partition, never a global sort).  A cell that loses all
 members never arises (counts only grow); a duplicate-seed cell that
 attracts no members simply drops from the model, exactly as
-``kmeans_train`` drops empty cells.
-
-Exactly-once: the same batch-id replay ratchet + crash-safe directory
-swap as the other model sinks (the additive merge is not idempotent;
-the ratchet mirrors the reference's monotonic offset guard,
-OriginalSourceServerInExecutor.scala:164-171).
+``kmeans_train`` drops empty cells.  Replay and crash safety come from
+``MergeableStore`` (streaming/store.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from spark_binlog_spark.functions.similarity import (
     assign_to_centroids,
     int_dot,
     with_quantized,
 )
-from spark_binlog_spark.streaming.swap import recover_dir, safe_swap
+from spark_binlog_spark.streaming.store import MergeableStore
 
 
-class MiniBatchKmeansSink:
-    """foreachBatch sink maintaining per-(cell, dim) centroid sums.
+class MiniBatchKmeansSink(MergeableStore):
+    """foreachBatch sink maintaining per-(cell, dim) centroid sums of
+    the ``embedding`` column.
 
     ``model()`` -> (centroid_id, dim, n_members, mean_q);
     ``centroids()`` -> (centroid_id, cq, cnorm) ready for
     ``assign_to_centroids`` — both derived from the live store.
     """
 
+    schema = "centroid_id long, dim long, s long, n long"
+    keys = ("centroid_id", "dim")
+    merge = "sum"
+
     def __init__(
-        self,
-        spark: SparkSession,
-        stats_dir: str,
-        n_clusters: int = 8,
-        vec_col: str = "embedding",
-        resume: bool = True,
+        self, spark: SparkSession, stats_dir: str, n_clusters: int = 8, resume: bool = True
     ):
-        self.spark = spark
-        self.stats_dir = stats_dir
-        self.k = n_clusters
-        self.vec_col = vec_col
-        self._schema = StructType(
-            [
-                StructField("centroid_id", LongType()),
-                StructField("dim", LongType()),
-                StructField("s", LongType()),
-                StructField("n", LongType()),
-                StructField("batch_id", LongType()),
-            ]
-        )
-        ok = recover_dir(stats_dir)
-        if not (resume and ok):
-            self.spark.createDataFrame([], self._schema).write.mode(
-                "overwrite"
-            ).parquet(stats_dir)
-
-    def _stats(self) -> DataFrame:
-        return self.spark.read.schema(self._schema).parquet(self.stats_dir)
-
-    def _last_batch_id(self) -> int:
-        row = self._stats().agg(F.max("batch_id")).collect()[0]
-        return row[0] if row[0] is not None else -1
+        self.n_clusters = n_clusters
+        super().__init__(spark, stats_dir, resume)
 
     def model(self) -> DataFrame:
         """(centroid_id, dim, n_members, mean_q): the live model table —
@@ -112,9 +84,7 @@ class MiniBatchKmeansSink:
             "centroid_id", "cq", int_dot(F.col("cq"), F.col("cq")).alias("cnorm")
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self._last_batch_id():
-            return  # replayed batch (crash between swap and commit)
+    def _delta(self, batch_df, batch_id):
         if batch_df.isEmpty():
             # Skip empty batches EXPLICITLY (ADVICE r8): seeding below
             # keys on store emptiness, so without this an empty batch 0
@@ -123,14 +93,14 @@ class MiniBatchKmeansSink:
             # (its k smallest vec_ids), regardless of how many empty
             # triggers precede it.  The ratchet intentionally stays
             # unrecorded — replaying an empty batch re-skips, idempotent.
-            return
-        qb = with_quantized(batch_df, self.vec_col)
+            return None
+        qb = with_quantized(batch_df)
         if self._stats().limit(1).count() == 0:
             # first batch: seeds = its k smallest vec_ids
             # (TakeOrderedAndProject — never a global sort)
             cents = (
                 qb.orderBy("vec_id")
-                .limit(self.k)
+                .limit(self.n_clusters)
                 .select(
                     F.col("vec_id").alias("centroid_id"),
                     F.col("q").alias("cq"),
@@ -139,60 +109,10 @@ class MiniBatchKmeansSink:
             )
         else:
             cents = self.centroids()
-        assigned = assign_to_centroids(qb, cents)
-        delta = (
-            assigned.select(
-                "centroid_id", F.posexplode(F.col("q")).alias("dim", "val")
-            )
-            .select(
-                "centroid_id", F.col("dim").cast("long").alias("dim"), "val"
-            )
+        return (
+            assign_to_centroids(qb, cents)
+            .select("centroid_id", F.posexplode(F.col("q")).alias("dim", "val"))
+            .select("centroid_id", F.col("dim").cast("long").alias("dim"), "val")
             .groupBy("centroid_id", "dim")
-            .agg(F.sum("val").alias("ds"), F.count("*").alias("dn"))
+            .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
         )
-        merged = (
-            self._stats()
-            .join(delta, ["centroid_id", "dim"], "full_outer")
-            .select(
-                "centroid_id",
-                "dim",
-                (F.coalesce(F.col("s"), F.lit(0)) + F.coalesce(F.col("ds"), F.lit(0)))
-                .cast("long")
-                .alias("s"),
-                (F.coalesce(F.col("n"), F.lit(0)) + F.coalesce(F.col("dn"), F.lit(0)))
-                .cast("long")
-                .alias("n"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            )
-        )
-        tmp = f"{self.stats_dir}.b{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        safe_swap(self.stats_dir, tmp)
-
-
-def run_minibatch_kmeans(
-    spark: SparkSession,
-    vecs_dir: str,
-    stats_dir: str,
-    checkpoint_dir: str,
-    schema,
-    n_clusters: int = 8,
-    max_files_per_trigger: int = 1,
-) -> MiniBatchKmeansSink:
-    """Stream a directory of embedding files (one micro-batch per file
-    by default) through the model sink via availableNow; returns the
-    sink whose ``model``/``centroids`` serve the live clustering."""
-    sink = MiniBatchKmeansSink(spark, stats_dir, n_clusters=n_clusters)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(vecs_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink

@@ -9,67 +9,38 @@ bigram (prefix) table DERIVES from the trigram table at serve time
 (each prefix's count = the sum of its extensions' counts — see
 ``text.lm_score``).  ``familiarity`` scores any relation against the
 CURRENT model; ``quality_buckets`` serves the full CCNet head/middle/
-tail tercile assignment off it.
-
-Exactly-once: the same batch-id replay ratchet + crash-safe directory
-swap as ``CorpusStatsSink``/``DsirModelSink`` (the additive merge is
-not idempotent; the ratchet mirrors the reference's monotonic offset
-guard, OriginalSourceServerInExecutor.scala:164-171).
+tail tercile assignment off it.  Replay and crash safety come from
+``MergeableStore`` (streaming/store.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql import DataFrame
 
 from spark_binlog_spark.functions.text import (
     ccnet_cut_buckets,
     lm_score,
     lm_tri_counts,
 )
-from spark_binlog_spark.streaming.swap import recover_dir, safe_swap
+from spark_binlog_spark.streaming.store import MergeableStore
 
 
-class LmModelSink:
+class LmModelSink(MergeableStore):
     """foreachBatch sink maintaining the trigram-count LM model.
 
     A stream ingested to completion scores (and buckets) bit-identically
     to the one-shot batch ``lm_familiarity`` / ``ccnet_buckets``.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        stats_dir: str,
-        text_col: str = "text",
-        resume: bool = True,
-    ):
-        self.spark = spark
-        self.stats_dir = stats_dir
-        self.text_col = text_col
-        self._schema = StructType(
-            [
-                # packed integer trigram key (text.lm_positions r13):
-                # cp1*2^42 + cp2*2^21 + cp3 — exact bijection with the
-                # 3-char substring, long hash/join keys in every pass
-                StructField("tri", LongType()),
-                StructField("c_tri", LongType()),
-                StructField("batch_id", LongType()),
-            ]
-        )
-        ok = recover_dir(stats_dir)
-        if not (resume and ok):
-            self.spark.createDataFrame([], self._schema).write.mode(
-                "overwrite"
-            ).parquet(stats_dir)
+    # packed integer trigram key (text.lm_positions r13):
+    # cp1*2^42 + cp2*2^21 + cp3 — exact bijection with the 3-char
+    # substring, long hash/join keys in every pass
+    schema = "tri long, c_tri long"
+    keys = ("tri",)
+    merge = "sum"
 
-    def _stats(self) -> DataFrame:
-        return self.spark.read.schema(self._schema).parquet(self.stats_dir)
-
-    def _last_batch_id(self) -> int:
-        row = self._stats().agg(F.max("batch_id")).collect()[0]
-        return row[0] if row[0] is not None else -1
+    def _delta(self, batch_df, batch_id):
+        return lm_tri_counts(batch_df)
 
     def model(self) -> DataFrame:
         """(tri, c_tri) — the live model, ≤ |charset|³ rows."""
@@ -79,61 +50,10 @@ class LmModelSink:
         """lm_familiarity's exact output contract served from the live
         model — the corpus is scanned once, the model broadcasts (or
         ships as a gated driver collect on the vectorized fast path)."""
-        return lm_score(df, self.model(), self.text_col)
+        return lm_score(df, self.model())
 
     def quality_buckets(self, df: DataFrame) -> DataFrame:
         """ccnet_buckets' exact output contract served from the live
         model: score + histogram-cut terciles, zero model recompute."""
         fam = self.familiarity(df)
         return ccnet_cut_buckets(df.select("doc_id", "lang").join(fam, "doc_id"))
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self._last_batch_id():
-            return  # replayed batch (crash between swap and commit)
-        delta = lm_tri_counts(batch_df, self.text_col).withColumnRenamed(
-            "c_tri", "d_tri"
-        )
-        merged = (
-            self._stats()
-            .join(delta, "tri", "full_outer")
-            .select(
-                "tri",
-                (
-                    F.coalesce(F.col("c_tri"), F.lit(0))
-                    + F.coalesce(F.col("d_tri"), F.lit(0))
-                )
-                .cast("long")
-                .alias("c_tri"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            )
-        )
-        tmp = f"{self.stats_dir}.b{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        safe_swap(self.stats_dir, tmp)
-
-
-def run_lm_model(
-    spark: SparkSession,
-    docs_dir: str,
-    stats_dir: str,
-    checkpoint_dir: str,
-    schema,
-    max_files_per_trigger: int = 1,
-) -> LmModelSink:
-    """Stream a directory of document files (one micro-batch per file by
-    default) through the model sink via availableNow; returns the sink
-    whose ``familiarity``/``quality_buckets`` serve the live model."""
-    sink = LmModelSink(spark, stats_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(docs_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink

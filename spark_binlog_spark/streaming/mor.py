@@ -163,9 +163,6 @@ class MergeOnReadSink:
         # would invert the order once a packed reference-style offset
         # (fileId * 10^13 + pos > 2^40) shows up in cdc_offset
         winner = latest_image(deltas, [self.change_key_col], offset_col=["batch_id", self.offset_col])
-        from pyspark.storagelevel import StorageLevel
-
-        winner = winner.persist(StorageLevel.MEMORY_AND_DISK)  # 3 consumers below
         upserts_src = winner.filter(F.col(self.op_col) != "delete")
         # broadcasting the PRESERVED side of an outer join is
         # unsupported (would silently shuffle the base) — so: anti-join

@@ -287,32 +287,3 @@ class NearDupIngestSink:
                 admitted.unpersist()
         finally:
             sig.unpersist()
-
-
-def run_neardup_ingest(
-    spark: SparkSession,
-    docs_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    schema,
-    min_agree: int = 2,
-    max_files_per_trigger: int = 1,
-    n_buckets: int = 16,
-) -> NearDupIngestSink:
-    """Stream a directory of document files (one micro-batch per file
-    by default) through the near-dup admission sink via availableNow;
-    returns the sink whose ``accepted()`` is the admitted doc set."""
-    sink = NearDupIngestSink(spark, store_dir, min_agree=min_agree, n_buckets=n_buckets)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(docs_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink

@@ -26,6 +26,7 @@ from pyspark.sql.types import (
 from spark_binlog_spark.envelope import envelope_schema, flatten_rows
 from spark_binlog_spark.operators import cdc_apply
 from spark_binlog_spark.sources.binlog_fixture import register
+from spark_binlog_spark.streaming.runner import run_foreach_batch
 from spark_binlog_spark.streaming.swap import recover_dir, safe_swap
 
 STREAM_ROW_SCHEMA = StructType(
@@ -266,14 +267,16 @@ def run_cdc_upsert(
     sink = ParquetUpsertSink(spark, state_dir, base, key_col, set_cols, resume=resume)
     wire = read_stream(spark, events_path, **source_options)
     changes = parse_stream(wire)
-    writer = changes.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint_dir)
     if await_events is None:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
-        q = writer.trigger(processingTime="200 milliseconds").start()
-        if not await_stream(q, lambda: sink.applied_rows >= await_events):
-            raise TimeoutError(
-                f"stream applied {sink.applied_rows}/{await_events} events before timeout"
-            )
+        return run_foreach_batch(changes, sink, checkpoint_dir)
+    q = (
+        changes.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(processingTime="200 milliseconds")
+        .start()
+    )
+    if not await_stream(q, lambda: sink.applied_rows >= await_events):
+        raise TimeoutError(
+            f"stream applied {sink.applied_rows}/{await_events} events before timeout"
+        )
     return sink

@@ -205,39 +205,3 @@ class Scd2HistorySink:
             self.spark.createDataFrame([], self.schema).dtypes
         )
         return [(c, types[c]) for c in self.value_cols]
-
-
-def run_scd2_ingest(
-    spark: SparkSession,
-    changes_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    schema,
-    value_cols: tuple[str, ...] = ("value",),
-    value_schema: str = "value double",
-    max_files_per_trigger: int = 1,
-    n_buckets: int = 16,
-) -> Scd2HistorySink:
-    """Stream a directory of change files (one micro-batch per file by
-    default) through the SCD2 maintenance sink via availableNow;
-    returns the sink whose ``history()`` is the maintained relation."""
-    sink = Scd2HistorySink(
-        spark,
-        store_dir,
-        value_cols=value_cols,
-        value_schema=value_schema,
-        n_buckets=n_buckets,
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(changes_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink

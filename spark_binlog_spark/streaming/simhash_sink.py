@@ -340,34 +340,3 @@ class SimHashIngestSink:
                 admitted.unpersist()
         finally:
             sig.unpersist()
-
-
-def run_simhash_ingest(
-    spark: SparkSession,
-    docs_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    schema,
-    max_hamming: int = 2,
-    max_files_per_trigger: int = 1,
-    n_buckets: int = 16,
-) -> SimHashIngestSink:
-    """Stream a directory of document files through the SimHash
-    admission sink via availableNow; returns the sink whose
-    ``accepted()`` is the admitted doc set."""
-    sink = SimHashIngestSink(
-        spark, store_dir, max_hamming=max_hamming, n_buckets=n_buckets
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(docs_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink

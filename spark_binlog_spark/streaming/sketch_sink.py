@@ -1,35 +1,25 @@
-"""Streaming sketch maintenance: count-min term frequencies and
-HyperLogLog distinct counts kept live as documents are ingested.
+"""Streaming sketch maintenance: count-min term frequencies, HyperLogLog
+distinct counts, log-bin histograms, KMV and priority bottom-k sets and
+bloom set bits, kept live as documents are ingested.
 
-Both sketches are MONOIDS — the count-min grid merges by cell-wise
-SUM, the HLL register table by register-wise MAX — which is exactly
-the shape a continuous-ingest pipeline needs: each micro-batch
-contributes one bounded delta (<= d*w cells / <= |groups|*m
-registers), the store is bounded at that size FOREVER, and the corpus
-is read once, at ingest.  A 100 TB pipeline serves "how often has
-this term appeared so far" and "how many distinct terms per source"
-with zero corpus re-reads.
-
-Exactly-once: foreachBatch is at-least-once under hard crashes.  The
-CMS merge is additive and NOT idempotent, so it carries the
-batch-id ratchet (the same guard as ``CorpusStatsSink``/
-``DsirModelSink``, mirroring the reference's monotonic offset guard,
-OriginalSourceServerInExecutor.scala:164-171).  The HLL max-merge IS
-idempotent — replaying a batch cannot move a max — but the ratchet is
-kept anyway so the two stores expose the same replay contract (and
-skipping a replayed batch is cheaper than re-merging it).
-Crash-safety of the directory swap comes from ``safe_swap``/
-``recover_dir``.
+Every sketch is a MONOID (count-min cells and histogram bins merge by
+SUM, HLL registers by MAX, bottom-k sets by union-then-retake, bloom
+bits by union), which is exactly the shape a continuous-ingest pipeline
+needs: each micro-batch contributes one bounded delta, the store is
+bounded at that size FOREVER, and the corpus is read once, at ingest.
+A 100 TB pipeline serves "how often has this term appeared so far" and
+"how many distinct terms per source" with zero corpus re-reads.  Replay
+and crash safety come from ``MergeableStore`` (streaming/store.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from spark_binlog_spark.functions.sketch import (
     KMV_K,
+    PRIORITY_K,
     cms_build,
     cms_estimate,
     hist_build,
@@ -38,11 +28,13 @@ from spark_binlog_spark.functions.sketch import (
     hll_registers,
     kmv_jaccard,
     kmv_sketch,
+    priority_sample,
+    token_count_expr,
 )
-from spark_binlog_spark.streaming.swap import recover_dir, safe_swap
+from spark_binlog_spark.streaming.store import MergeableStore
 
 
-class CmsSketchSink:
+class CmsSketchSink(MergeableStore):
     """foreachBatch sink maintaining a count-min term-frequency grid.
 
     ``grid()`` -> (row, col, cnt); ``estimate(terms)`` -> the same
@@ -50,36 +42,12 @@ class CmsSketchSink:
     stream ingested to completion answers point queries bit-identically
     to the one-shot batch sketch."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        stats_dir: str,
-        text_col: str = "text",
-        resume: bool = True,
-    ):
-        self.spark = spark
-        self.stats_dir = stats_dir
-        self.text_col = text_col
-        self._schema = StructType(
-            [
-                StructField("row", LongType()),
-                StructField("col", LongType()),
-                StructField("cnt", LongType()),
-                StructField("batch_id", LongType()),
-            ]
-        )
-        ok = recover_dir(stats_dir)
-        if not (resume and ok):
-            self.spark.createDataFrame([], self._schema).write.mode(
-                "overwrite"
-            ).parquet(stats_dir)
+    schema = "row long, col long, cnt long"
+    keys = ("row", "col")
+    merge = "sum"
 
-    def _stats(self) -> DataFrame:
-        return self.spark.read.schema(self._schema).parquet(self.stats_dir)
-
-    def _last_batch_id(self) -> int:
-        row = self._stats().agg(F.max("batch_id")).collect()[0]
-        return row[0] if row[0] is not None else -1
+    def _delta(self, batch_df, batch_id):
+        return cms_build(batch_df)
 
     def grid(self) -> DataFrame:
         return self._stats().select("row", "col", "cnt")
@@ -89,335 +57,105 @@ class CmsSketchSink:
         (term, est_cnt), zero corpus reads."""
         return cms_estimate(self.grid(), terms)
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self._last_batch_id():
-            return  # replayed batch (crash between swap and commit)
-        delta = cms_build(batch_df, self.text_col)
-        merged = (
-            self._stats()
-            .join(delta.withColumnRenamed("cnt", "dcnt"), ["row", "col"], "full_outer")
-            .select(
-                "row",
-                "col",
-                (F.coalesce(F.col("cnt"), F.lit(0)) + F.coalesce(F.col("dcnt"), F.lit(0)))
-                .cast("long")
-                .alias("cnt"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            )
-        )
-        tmp = f"{self.stats_dir}.b{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        safe_swap(self.stats_dir, tmp)
 
+class HllSketchSink(MergeableStore):
+    """foreachBatch sink maintaining per-source HLL register tables.
 
-class HllSketchSink:
-    """foreachBatch sink maintaining per-group HLL register tables.
-
-    ``registers()`` -> (by, idx, m_rho); ``distinct_counts()`` -> the
+    ``registers()`` -> (source, idx, m_rho); ``distinct_counts()`` -> the
     same contract as the batch ``hll_estimate`` over
     ``hll_registers``, so a stream ingested to completion estimates
     bit-identically to the one-shot batch sketch."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        stats_dir: str,
-        by: str = "source",
-        text_col: str = "text",
-        resume: bool = True,
-    ):
-        self.spark = spark
-        self.stats_dir = stats_dir
-        self.by = by
-        self.text_col = text_col
-        self._schema = StructType(
-            [
-                StructField(by, StringType()),
-                StructField("idx", LongType()),
-                StructField("m_rho", LongType()),
-                StructField("batch_id", LongType()),
-            ]
-        )
-        ok = recover_dir(stats_dir)
-        if not (resume and ok):
-            self.spark.createDataFrame([], self._schema).write.mode(
-                "overwrite"
-            ).parquet(stats_dir)
+    schema = "source string, idx long, m_rho long"
+    keys = ("source", "idx")
+    merge = "max"
 
-    def _stats(self) -> DataFrame:
-        return self.spark.read.schema(self._schema).parquet(self.stats_dir)
-
-    def _last_batch_id(self) -> int:
-        row = self._stats().agg(F.max("batch_id")).collect()[0]
-        return row[0] if row[0] is not None else -1
+    def _delta(self, batch_df, batch_id):
+        return hll_registers(batch_df)
 
     def registers(self) -> DataFrame:
-        return self._stats().select(self.by, "idx", "m_rho")
+        return self._stats().select("source", "idx", "m_rho")
 
     def distinct_counts(self) -> DataFrame:
-        """(by, n_registers, est_distinct) served off the LIVE
+        """(source, n_registers, est_distinct) served off the LIVE
         registers — zero corpus reads."""
-        return hll_estimate(self.registers(), self.by)
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self._last_batch_id():
-            return  # replay: a max-merge is idempotent, skip is cheaper
-        delta = hll_registers(batch_df, self.by, self.text_col)
-        merged = (
-            self._stats()
-            .join(
-                delta.withColumnRenamed("m_rho", "d_rho"),
-                [self.by, "idx"],
-                "full_outer",
-            )
-            .select(
-                self.by,
-                "idx",
-                F.greatest(
-                    F.coalesce(F.col("m_rho"), F.lit(0)),
-                    F.coalesce(F.col("d_rho"), F.lit(0)),
-                ).cast("long").alias("m_rho"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            )
-        )
-        tmp = f"{self.stats_dir}.b{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        safe_swap(self.stats_dir, tmp)
+        return hll_estimate(self.registers())
 
 
-class HistSketchSink:
-    """foreachBatch sink maintaining per-group log-bin value histograms
-    (functions/sketch.py hist_build) — the additive quantile-sketch
-    monoid: each micro-batch contributes <= |groups| * 2^11 bin rows,
-    cells merge by SUM, and ``quantiles()`` serves p50/p90/p99 off the
-    bounded store with zero corpus reads.  Same replay ratchet and
-    crash-safe swap contract as ``CmsSketchSink``."""
+class HistSketchSink(MergeableStore):
+    """foreachBatch sink maintaining per-source log-bin token-count
+    histograms (functions/sketch.py hist_build) — the additive
+    quantile-sketch monoid: each micro-batch contributes <= |sources| *
+    2^11 bin rows, and ``quantiles()`` serves p50/p90/p99 off the
+    bounded store with zero corpus reads."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        stats_dir: str,
-        by: str = "source",
-        value_expr: str | None = None,
-        resume: bool = True,
-    ):
-        self.spark = spark
-        self.stats_dir = stats_dir
-        self.by = by
-        self.value_expr = value_expr
-        self._schema = StructType(
-            [
-                StructField(by, StringType()),
-                StructField("bin_id", LongType()),
-                StructField("cnt", LongType()),
-                StructField("batch_id", LongType()),
-            ]
-        )
-        ok = recover_dir(stats_dir)
-        if not (resume and ok):
-            self.spark.createDataFrame([], self._schema).write.mode(
-                "overwrite"
-            ).parquet(stats_dir)
+    schema = "source string, bin_id long, cnt long"
+    keys = ("source", "bin_id")
+    merge = "sum"
 
-    def _stats(self) -> DataFrame:
-        return self.spark.read.schema(self._schema).parquet(self.stats_dir)
-
-    def _last_batch_id(self) -> int:
-        row = self._stats().agg(F.max("batch_id")).collect()[0]
-        return row[0] if row[0] is not None else -1
+    def _delta(self, batch_df, batch_id):
+        return hist_build(batch_df)
 
     def histogram(self) -> DataFrame:
-        return self._stats().select(self.by, "bin_id", "cnt")
+        return self._stats().select("source", "bin_id", "cnt")
 
     def quantiles(self) -> DataFrame:
-        """(by, total, p50, p90, p99) served off the LIVE histogram —
+        """(source, total, p50, p90, p99) served off the LIVE histogram —
         zero corpus reads."""
-        return hist_quantiles(self.histogram(), self.by)
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self._last_batch_id():
-            return  # replayed batch (additive merge is not idempotent)
-        delta = hist_build(batch_df, self.by, self.value_expr)
-        merged = (
-            self._stats()
-            .join(
-                delta.withColumnRenamed("cnt", "dcnt"),
-                [self.by, "bin_id"],
-                "full_outer",
-            )
-            .select(
-                self.by,
-                "bin_id",
-                (F.coalesce(F.col("cnt"), F.lit(0)) + F.coalesce(F.col("dcnt"), F.lit(0)))
-                .cast("long")
-                .alias("cnt"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            )
-        )
-        tmp = f"{self.stats_dir}.b{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        safe_swap(self.stats_dir, tmp)
+        return hist_quantiles(self.histogram())
 
 
-class KmvSketchSink:
-    """foreachBatch sink maintaining per-group KMV bottom-k hash sets
+class KmvSketchSink(MergeableStore):
+    """foreachBatch sink maintaining per-source KMV bottom-k hash sets
     (functions/sketch.py kmv_sketch) — the set-operation sketch: the
-    store is <= |groups| * k hashes forever, merges by
-    union-then-retake (idempotent, so replay is naturally harmless),
-    and ``jaccard()`` serves the pairwise cross-group similarity
-    matrix off the live store with zero corpus reads.  Same ratchet
-    and crash-safe swap contract as the other sketch sinks."""
+    store is <= |sources| * k hashes forever, and ``jaccard()`` serves
+    the pairwise cross-source similarity matrix off the live store with
+    zero corpus reads."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        stats_dir: str,
-        by: str = "source",
-        text_col: str = "text",
-        resume: bool = True,
-    ):
-        self.spark = spark
-        self.stats_dir = stats_dir
-        self.by = by
-        self.text_col = text_col
-        self._schema = StructType(
-            [
-                StructField(by, StringType()),
-                StructField("h", LongType()),
-                StructField("batch_id", LongType()),
-            ]
-        )
-        ok = recover_dir(stats_dir)
-        if not (resume and ok):
-            self.spark.createDataFrame([], self._schema).write.mode(
-                "overwrite"
-            ).parquet(stats_dir)
+    schema = "source string, h long"
+    keys = ("source",)
+    merge = "bottom-k"
+    order = ("h",)
+    k = KMV_K
 
-    def _stats(self) -> DataFrame:
-        return self.spark.read.schema(self._schema).parquet(self.stats_dir)
-
-    def _last_batch_id(self) -> int:
-        row = self._stats().agg(F.max("batch_id")).collect()[0]
-        return row[0] if row[0] is not None else -1
+    def _delta(self, batch_df, batch_id):
+        return kmv_sketch(batch_df)
 
     def sketch(self) -> DataFrame:
-        return self._stats().select(self.by, "h")
+        return self._stats().select("source", "h")
 
     def jaccard(self) -> DataFrame:
         """(src_a, src_b, kk, inter, jacc4) served off the LIVE
         bottom-k store — zero corpus reads."""
-        return kmv_jaccard(self.sketch(), self.by)
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql.window import Window
-
-        if batch_id <= self._last_batch_id():
-            return  # replay: union-retake is idempotent, skip is cheaper
-        delta = kmv_sketch(batch_df, self.by, self.text_col)
-        w = Window.partitionBy(self.by).orderBy("h")
-        merged = (
-            self.sketch()
-            .unionByName(delta)
-            .distinct()
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= KMV_K)
-            .select(
-                self.by,
-                "h",
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            )
-        )
-        tmp = f"{self.stats_dir}.b{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        safe_swap(self.stats_dir, tmp)
+        return kmv_jaccard(self.sketch())
 
 
-class PrioritySampleSink:
-    """foreachBatch sink maintaining per-group weighted priority
-    samples (functions/sketch.py priority_sample): the store is the
-    k lowest-priority rows per group — a union-retake monoid exactly
-    like KMV, so the live sample over all batches equals the one-shot
-    batch sample.  A 100 TB pipeline keeps a statistically-valid
-    weighted sample of everything it ever ingested in |groups| * k
-    rows, with zero corpus re-reads.  Same ratchet and crash-safe swap
-    contract as the other sketch sinks."""
+class PrioritySampleSink(MergeableStore):
+    """foreachBatch sink maintaining per-source token-weighted priority
+    samples (functions/sketch.py priority_sample): the store is the k
+    lowest-priority documents per source — a union-retake monoid like
+    KMV, so the live sample over all batches equals the one-shot batch
+    sample over their distinct documents.  A document ingested again
+    unchanged is kept once (a sample without replacement); the one-shot
+    sample over the concatenated batches would hold it twice.  A 100 TB
+    pipeline keeps a statistically-valid weighted sample of everything
+    it ever ingested in |sources| * k rows, with zero corpus re-reads."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        stats_dir: str,
-        by: str = "source",
-        weight_expr: str | None = None,
-        id_col: str = "doc_id",
-        k: int | None = None,
-        resume: bool = True,
-    ):
-        from spark_binlog_spark.functions.sketch import (
-            PRIORITY_K,
-            token_count_expr,
-        )
+    schema = "source string, doc_id long, weight long, priority long"
+    keys = ("source",)
+    merge = "bottom-k"
+    order = ("priority", "doc_id")
+    k = PRIORITY_K
 
-        self.spark = spark
-        self.stats_dir = stats_dir
-        self.by = by
-        self.weight_expr = weight_expr or token_count_expr()
-        self.id_col = id_col
-        self.k = k or PRIORITY_K
-        self._schema = StructType(
-            [
-                StructField(by, StringType()),
-                StructField(id_col, LongType()),
-                StructField("weight", LongType()),
-                StructField("priority", LongType()),
-                StructField("batch_id", LongType()),
-            ]
-        )
-        ok = recover_dir(stats_dir)
-        if not (resume and ok):
-            self.spark.createDataFrame([], self._schema).write.mode(
-                "overwrite"
-            ).parquet(stats_dir)
-
-    def _stats(self) -> DataFrame:
-        return self.spark.read.schema(self._schema).parquet(self.stats_dir)
-
-    def _last_batch_id(self) -> int:
-        row = self._stats().agg(F.max("batch_id")).collect()[0]
-        return row[0] if row[0] is not None else -1
+    def _delta(self, batch_df, batch_id):
+        return priority_sample(batch_df, weight=F.expr(token_count_expr()), k=self.k)
 
     def sample(self) -> DataFrame:
         """The LIVE weighted sample — zero corpus reads."""
-        return self._stats().select(self.by, self.id_col, "weight", "priority")
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from spark_binlog_spark.functions.sketch import (
-            bottom_k,
-            priority_sample,
-        )
-
-        if batch_id <= self._last_batch_id():
-            return  # replay: union-retake is idempotent, skip is cheaper
-        delta = priority_sample(
-            batch_df, self.by, F.expr(self.weight_expr), self.id_col, self.k
-        )
-        merged = bottom_k(
-            self.sample().unionByName(delta),
-            self.by,
-            ["priority", self.id_col],
-            self.k,
-        ).select(
-            self.by,
-            self.id_col,
-            "weight",
-            "priority",
-            F.lit(batch_id).cast("long").alias("batch_id"),
-        )
-        tmp = f"{self.stats_dir}.b{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        safe_swap(self.stats_dir, tmp)
+        return self._stats().select(*self._cols)
 
 
-class BloomBitsSink:
+class BloomBitsSink(MergeableStore):
     """foreachBatch sink growing a bloom-filter's set-bit relation as
     benchmark/eval suites arrive (functions/dedup.py bloom_bits): the
     store is the DISTINCT set-bit positions — bounded by the 2^22-bit
@@ -428,38 +166,17 @@ class BloomBitsSink:
     delta instead of a full rebuild.  An optional ``where`` expression
     routes only benchmark rows into the filter at ingest."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        stats_dir: str,
-        text_col: str = "text",
-        n: int = 4,
-        where: str | None = None,
-        resume: bool = True,
-    ):
-        self.spark = spark
-        self.stats_dir = stats_dir
-        self.text_col = text_col
-        self.n = n
+    schema = "bit long"
+    merge = "distinct-union"
+
+    def __init__(self, spark, stats_dir, where: str | None = None, resume: bool = True):
         self.where = where
-        self._schema = StructType(
-            [
-                StructField("bit", LongType()),
-                StructField("batch_id", LongType()),
-            ]
-        )
-        ok = recover_dir(stats_dir)
-        if not (resume and ok):
-            self.spark.createDataFrame([], self._schema).write.mode(
-                "overwrite"
-            ).parquet(stats_dir)
+        super().__init__(spark, stats_dir, resume)
 
-    def _stats(self) -> DataFrame:
-        return self.spark.read.schema(self._schema).parquet(self.stats_dir)
+    def _delta(self, batch_df, batch_id):
+        from spark_binlog_spark.functions.dedup import bloom_bits
 
-    def _last_batch_id(self) -> int:
-        row = self._stats().agg(F.max("batch_id")).collect()[0]
-        return row[0] if row[0] is not None else -1
+        return bloom_bits(batch_df.where(self.where) if self.where else batch_df)
 
     def bits(self) -> DataFrame:
         return self._stats().select("bit")
@@ -469,145 +186,4 @@ class BloomBitsSink:
         plan to the one-shot batch bloom sweep."""
         from spark_binlog_spark.functions.dedup import bloom_probe
 
-        return bloom_probe(docs, self.bits(), self.text_col, self.n)
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from spark_binlog_spark.functions.dedup import bloom_bits
-
-        if batch_id <= self._last_batch_id():
-            return  # replay: a set union is idempotent, skip is cheaper
-        if self.where:
-            batch_df = batch_df.where(self.where)
-        delta = bloom_bits(batch_df, self.text_col, self.n)
-        merged = (
-            self.bits()
-            .unionByName(delta)
-            .distinct()
-            .select("bit", F.lit(batch_id).cast("long").alias("batch_id"))
-        )
-        tmp = f"{self.stats_dir}.b{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        safe_swap(self.stats_dir, tmp)
-
-
-def _run_stream(spark, docs_dir, checkpoint_dir, schema, sink, max_files=1):
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files))
-        .parquet(docs_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink
-
-
-def run_cms_sketch(
-    spark: SparkSession,
-    docs_dir: str,
-    stats_dir: str,
-    checkpoint_dir: str,
-    schema,
-    max_files_per_trigger: int = 1,
-) -> CmsSketchSink:
-    """Stream a directory of document files through the CMS sink via
-    availableNow; returns the sink whose ``estimate`` serves the live
-    grid."""
-    return _run_stream(
-        spark, docs_dir, checkpoint_dir, schema,
-        CmsSketchSink(spark, stats_dir), max_files_per_trigger,
-    )
-
-
-def run_hll_sketch(
-    spark: SparkSession,
-    docs_dir: str,
-    stats_dir: str,
-    checkpoint_dir: str,
-    schema,
-    by: str = "source",
-    max_files_per_trigger: int = 1,
-) -> HllSketchSink:
-    """Stream a directory of document files through the HLL sink via
-    availableNow; returns the sink whose ``distinct_counts`` serves the
-    live registers."""
-    return _run_stream(
-        spark, docs_dir, checkpoint_dir, schema,
-        HllSketchSink(spark, stats_dir, by=by), max_files_per_trigger,
-    )
-
-
-def run_hist_sketch(
-    spark: SparkSession,
-    docs_dir: str,
-    stats_dir: str,
-    checkpoint_dir: str,
-    schema,
-    by: str = "source",
-    max_files_per_trigger: int = 1,
-) -> HistSketchSink:
-    """Stream a directory of document files through the histogram sink
-    via availableNow; returns the sink whose ``quantiles`` serves the
-    live log-bin store."""
-    return _run_stream(
-        spark, docs_dir, checkpoint_dir, schema,
-        HistSketchSink(spark, stats_dir, by=by), max_files_per_trigger,
-    )
-
-
-def run_kmv_sketch(
-    spark: SparkSession,
-    docs_dir: str,
-    stats_dir: str,
-    checkpoint_dir: str,
-    schema,
-    by: str = "source",
-    max_files_per_trigger: int = 1,
-) -> KmvSketchSink:
-    """Stream a directory of document files through the KMV sink via
-    availableNow; returns the sink whose ``jaccard`` serves the live
-    bottom-k store."""
-    return _run_stream(
-        spark, docs_dir, checkpoint_dir, schema,
-        KmvSketchSink(spark, stats_dir, by=by), max_files_per_trigger,
-    )
-
-
-def run_priority_sample(
-    spark: SparkSession,
-    docs_dir: str,
-    stats_dir: str,
-    checkpoint_dir: str,
-    schema,
-    by: str = "source",
-    max_files_per_trigger: int = 1,
-) -> PrioritySampleSink:
-    """Stream a directory of document files through the weighted
-    priority-sample sink via availableNow; returns the sink whose
-    ``sample`` serves the live per-group sample."""
-    return _run_stream(
-        spark, docs_dir, checkpoint_dir, schema,
-        PrioritySampleSink(spark, stats_dir, by=by), max_files_per_trigger,
-    )
-
-
-def run_bloom_bits(
-    spark: SparkSession,
-    docs_dir: str,
-    stats_dir: str,
-    checkpoint_dir: str,
-    schema,
-    where: str | None = None,
-    max_files_per_trigger: int = 1,
-) -> BloomBitsSink:
-    """Stream a directory of benchmark files through the bloom-bits
-    sink via availableNow; returns the sink whose ``probe`` serves the
-    live filter."""
-    return _run_stream(
-        spark, docs_dir, checkpoint_dir, schema,
-        BloomBitsSink(spark, stats_dir, where=where), max_files_per_trigger,
-    )
+        return bloom_probe(docs, self.bits())

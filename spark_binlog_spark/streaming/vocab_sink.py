@@ -8,27 +8,21 @@ merge contract as the count-min grid), and the store is
 vocabulary-sized: ~1000x smaller than the corpus it summarizes, and
 the exact relation every learn iteration would have to rebuild from
 scratch otherwise.  A 100 TB pipeline re-trains its tokenizer from
-this store with ZERO corpus re-reads.
-
-Exactly-once: additive merges are not idempotent, so the sink carries
-the batch-id ratchet (the same guard as the sketch sinks, mirroring
-the reference's monotonic offset guard,
-OriginalSourceServerInExecutor.scala:164-171); crash-safety of the
-directory swap comes from ``safe_swap``/``recover_dir``.
+this store with ZERO corpus re-reads.  Replay and crash safety come
+from ``MergeableStore`` (streaming/store.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from spark_binlog_spark.functions.bpe import EOW, WORD_RE
 from spark_binlog_spark.functions.text import words
-from spark_binlog_spark.streaming.swap import recover_dir, safe_swap
+from spark_binlog_spark.streaming.store import MergeableStore
 
 
-class WordFreqSink:
+class WordFreqSink(MergeableStore):
     """foreachBatch sink maintaining the (word, cnt) vocabulary store.
 
     ``vocab()`` returns the live table in ``bpe_vocab`` form —
@@ -36,35 +30,17 @@ class WordFreqSink:
     ``bpe_learn(spark, sink.vocab())`` trains off the store and, once
     the stream has drained, hash-matches the one-shot batch learn."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        stats_dir: str,
-        text_col: str = "text",
-        resume: bool = True,
-    ):
-        self.spark = spark
-        self.stats_dir = stats_dir
-        self.text_col = text_col
-        self._schema = StructType(
-            [
-                StructField("word", StringType()),
-                StructField("cnt", LongType()),
-                StructField("batch_id", LongType()),
-            ]
+    schema = "word string, cnt long"
+    keys = ("word",)
+    merge = "sum"
+
+    def _delta(self, batch_df, batch_id):
+        return (
+            batch_df.select(F.explode(words(F.col("text"))).alias("word"))
+            .where(F.col("word").rlike(WORD_RE))
+            .groupBy("word")
+            .agg(F.count("*").alias("cnt"))
         )
-        ok = recover_dir(stats_dir)
-        if not (resume and ok):
-            self.spark.createDataFrame([], self._schema).write.mode(
-                "overwrite"
-            ).parquet(stats_dir)
-
-    def _stats(self) -> DataFrame:
-        return self.spark.read.schema(self._schema).parquet(self.stats_dir)
-
-    def _last_batch_id(self) -> int:
-        row = self._stats().agg(F.max("batch_id")).collect()[0]
-        return row[0] if row[0] is not None else -1
 
     def word_counts(self) -> DataFrame:
         return self._stats().select("word", "cnt")
@@ -78,56 +54,3 @@ class WordFreqSink:
                 f"concat(filter(split(word, ''), x -> x != ''), array('{EOW}'))"
             ),
         )
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self._last_batch_id():
-            return  # replayed batch (additive merge is not idempotent)
-        delta = (
-            batch_df.select(
-                F.explode(words(F.col(self.text_col))).alias("word")
-            )
-            .where(F.col("word").rlike(WORD_RE))
-            .groupBy("word")
-            .agg(F.count("*").alias("dcnt"))
-        )
-        merged = (
-            self._stats()
-            .join(delta, "word", "full_outer")
-            .select(
-                "word",
-                (F.coalesce(F.col("cnt"), F.lit(0)) + F.coalesce(F.col("dcnt"), F.lit(0)))
-                .cast("long")
-                .alias("cnt"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            )
-        )
-        tmp = f"{self.stats_dir}.b{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        safe_swap(self.stats_dir, tmp)
-
-
-def run_word_freq(
-    spark: SparkSession,
-    docs_dir: str,
-    stats_dir: str,
-    checkpoint_dir: str,
-    schema,
-    max_files_per_trigger: int = 1,
-) -> WordFreqSink:
-    """Stream a directory of document files through the word-frequency
-    sink via availableNow; returns the sink whose ``vocab`` feeds
-    tokenizer training off the live store."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(docs_dir)
-    )
-    sink = WordFreqSink(spark, stats_dir)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink

@@ -1,4 +1,5 @@
 import os
+import shutil
 import sys
 
 import pytest
@@ -60,3 +61,28 @@ def duck():
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     yield con
     con.close()
+
+
+class _CrashAt:
+    """Makes the ``step``-th ``shutil.move``/``shutil.rmtree`` call made
+    while armed raise, as a crash at that step of a batch commit."""
+
+    def __init__(self, monkeypatch):
+        self.step = self.calls = 0
+        self.armed = self.fired = False
+        for name in ("move", "rmtree"):
+            monkeypatch.setattr(shutil, name, self._wrap(getattr(shutil, name)))
+
+    def reset(self, step):
+        self.step, self.calls, self.fired = step, 0, False
+
+    def _wrap(self, real):
+        def call(*args, **kwargs):
+            if self.armed:
+                self.calls += 1
+                if self.calls == self.step:
+                    self.fired = True
+                    raise OSError(f"injected crash at commit step {self.step}")
+            return real(*args, **kwargs)
+
+        return call

@@ -1,6 +1,7 @@
 """Bucketed co-located join (no exchange) + routed-table compaction."""
 
 import os
+import shutil
 
 from pyspark.sql import functions as F
 
@@ -11,7 +12,7 @@ from spark_binlog_spark.operators.bucketing import (
     save_bucketed,
 )
 from spark_binlog_spark.operators.router import route_to_tables
-from tests.conftest import SF_TEST
+from tests.conftest import SF_TEST, _CrashAt
 
 
 def test_bucketed_join_is_exchange_free(spark, tmp_path):
@@ -62,3 +63,40 @@ def test_compaction_preserves_content(spark, tmp_path):
             if t.startswith("table_name="):
                 pq_files = [f for f in os.listdir(f"{out}/{db}/{t}") if f.endswith(".parquet")]
                 assert len(pq_files) == 1
+
+
+def test_compaction_crash_at_every_step_keeps_rows(spark, tmp_path, monkeypatch):
+    """For k = 1, 2, ...: crash compaction at its k-th filesystem step,
+    then ``recover_dir``; the routed table keeps every row.  The loop
+    ends at the first k the compaction no longer reaches."""
+    from spark_binlog_spark.streaming.swap import recover_dir
+
+    seed = str(tmp_path / "seed")
+    ch = changes_df(spark, SF_TEST).select("cdc_offset", "pk", "database_name", "table_name")
+    for _ in range(2):
+        route_to_tables(ch, seed)
+
+    def rows(path):
+        return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    want = rows(seed)
+    crash = _CrashAt(monkeypatch)
+    step = 0
+    while True:
+        step += 1
+        assert step <= 10, "a compaction should take a handful of filesystem steps"
+        out = str(tmp_path / f"step{step}" / "routed")
+        shutil.copytree(seed, out)
+        crash.reset(step)
+        crash.armed = True
+        try:
+            compact_routed_table(spark, out)
+        except OSError:
+            pass
+        finally:
+            crash.armed = False
+        if not crash.fired:
+            break
+        assert recover_dir(out), f"crash at compaction step {step} lost the table"
+        assert rows(out) == want, f"crash at compaction step {step}"
+    assert step > 2, "expected a multi-step swap"

@@ -81,3 +81,33 @@ class TestSweepArtifact:
         slow = summary["results"]["q_slow"]
         assert slow["fresh_status"] == "WATCHDOG" and slow["sec_fresh"] is None
         assert summary["adjudicated"]["q_slow"]["fresh"] is None
+
+
+class TestOnlyMode:
+    def _only(self, mod, monkeypatch, capsys, runs):
+        calls = []
+
+        def run_one(spark, name, fn, watchdog):
+            calls.append(name)
+            return runs[len(calls) - 1]
+
+        monkeypatch.setattr(mod, "_run_one", run_one)
+        mod._only_mode("q_slow", 150.0)
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1]), len(calls)
+
+    def test_warm_runs_run_under_the_watchdog(self, sweep, monkeypatch, capsys):
+        runs = [{"status": "ok", "sec": s, "err": None} for s in (20.0, 12.5, 11.9)]
+        out, n = self._only(sweep, monkeypatch, capsys, runs)
+        assert n == 3
+        assert (out["status"], out["sec_cold"], out["sec"]) == ("ok", 20.0, 11.9)
+        assert out["warm_runs"] == [12.5, 11.9]
+
+    def test_warm_run_watchdog_sets_status(self, sweep, monkeypatch, capsys):
+        runs = [
+            {"status": "ok", "sec": 20.0, "err": None},
+            {"status": "WATCHDOG", "sec": 150.1, "err": "cancelled after 150.0s"},
+        ]
+        out, n = self._only(sweep, monkeypatch, capsys, runs)
+        assert n == 2  # the series ends at the first run that is not ok
+        assert (out["status"], out["sec_cold"], out["sec"]) == ("WATCHDOG", 20.0, None)
+        assert out["err"] == "cancelled after 150.0s"

@@ -1482,10 +1482,8 @@ class TestDedupIngestSink:
         import pyarrow as pa_
         import pyarrow.parquet as pq_
 
-        from spark_binlog_spark.streaming.dedup_sink import (
-            DedupIngestSink,
-            run_dedup_ingest,
-        )
+        from spark_binlog_spark.streaming.dedup_sink import DedupIngestSink
+        from spark_binlog_spark.streaming.runner import run_files
 
         def write_docs(name, rows, mtime):
             path = str(tmp_path / "docs" / name)
@@ -1511,9 +1509,9 @@ class TestDedupIngestSink:
             1e9 + 100,
         )
         store = str(tmp_path / "store")
-        sink = run_dedup_ingest(
-            spark, str(tmp_path / "docs"), store, str(tmp_path / "ck"),
-            "doc_id long, text string",
+        sink = run_files(
+            spark, str(tmp_path / "docs"), "doc_id long, text string", str(tmp_path / "ck"),
+            DedupIngestSink(spark, store),
         )
         accepted = {r["doc_id"] for r in sink.accepted().collect()}
         assert accepted == {1, 2, 11, 13}
@@ -1530,9 +1528,9 @@ class TestDedupIngestSink:
 
         # resume: a THIRD file appears; same checkpoint, only new text admitted
         write_docs("b2.parquet", [(20, "alpha beta"), (21, "zeta")], 1e9 + 200)
-        sink3 = run_dedup_ingest(
-            spark, str(tmp_path / "docs"), store, str(tmp_path / "ck"),
-            "doc_id long, text string",
+        sink3 = run_files(
+            spark, str(tmp_path / "docs"), "doc_id long, text string", str(tmp_path / "ck"),
+            DedupIngestSink(spark, store),
         )
         assert {r["doc_id"] for r in sink3.accepted().collect()} == {1, 2, 11, 13, 21}
 
@@ -1622,7 +1620,8 @@ class TestNearDupIngestSink:
         import pyarrow as pa_
         import pyarrow.parquet as pq_
 
-        from spark_binlog_spark.streaming.neardup_sink import run_neardup_ingest
+        from spark_binlog_spark.streaming.neardup_sink import NearDupIngestSink
+        from spark_binlog_spark.streaming.runner import run_files
 
         docs = str(tmp_path / "docs")
         os.makedirs(docs, exist_ok=True)
@@ -1638,9 +1637,9 @@ class TestNearDupIngestSink:
                 p,
             )
             os.utime(p, (1e9 + i * 100, 1e9 + i * 100))
-        return run_neardup_ingest(
-            spark, docs, str(tmp_path / "store"), str(tmp_path / "ck"),
-            "doc_id long, text string", **kw,
+        return run_files(
+            spark, docs, "doc_id long, text string", str(tmp_path / "ck"),
+            NearDupIngestSink(spark, str(tmp_path / "store"), **kw),
         )
 
     def test_admission_and_replay_idempotence(self, spark, tmp_path):
@@ -2122,9 +2121,8 @@ class TestEmbeddingNearDupIngestSink:
         import pyarrow as pa_
         import pyarrow.parquet as pq_
 
-        from spark_binlog_spark.streaming.embedding_sink import (
-            run_embedding_neardup_ingest,
-        )
+        from spark_binlog_spark.streaming.embedding_sink import EmbeddingNearDupIngestSink
+        from spark_binlog_spark.streaming.runner import run_files
 
         vecs = str(tmp_path / "vecs")
         os.makedirs(vecs, exist_ok=True)
@@ -2142,9 +2140,11 @@ class TestEmbeddingNearDupIngestSink:
                 p,
             )
             os.utime(p, (1e9 + i * 100, 1e9 + i * 100))
-        return run_embedding_neardup_ingest(
-            spark, vecs, str(tmp_path / "store"), str(tmp_path / "ck"),
-            self.SCHEMA, min_cosine4=8000, planes=4, n_tables=2,
+        return run_files(
+            spark, vecs, self.SCHEMA, str(tmp_path / "ck"),
+            EmbeddingNearDupIngestSink(
+                spark, str(tmp_path / "store"), min_cosine4=8000, planes=4, n_tables=2
+            ),
         )
 
     def test_admission_and_replay_idempotence(self, spark, tmp_path):
@@ -2970,11 +2970,12 @@ class TestCorpusStatsSink:
         Replay must re-apply the batch (totals ratchet is still behind)
         and converge both stores to the no-crash state."""
         from spark_binlog_spark.streaming import corpus_stats as cs
+        from spark_binlog_spark.streaming import store
 
         sink = cs.CorpusStatsSink(spark, str(tmp_path / "stats"), resume=False)
         sink(self._docs(spark, [("a", "s0"), ("b c", "s0")]), 0)
 
-        real_swap = cs.safe_swap
+        real_swap = store.safe_swap
         calls = {"n": 0}
 
         def crashing_swap(dst, tmp):
@@ -2983,13 +2984,13 @@ class TestCorpusStatsSink:
                 raise RuntimeError("simulated crash between swaps")
             return real_swap(dst, tmp)
 
-        monkeypatch.setattr(cs, "safe_swap", crashing_swap)
+        monkeypatch.setattr(store, "safe_swap", crashing_swap)
         b1 = self._docs(spark, [("x y z", "s0"), ("w", "s1")])
         import pytest as _pytest
 
         with _pytest.raises(RuntimeError, match="simulated crash"):
             sink(b1, 1)
-        monkeypatch.setattr(cs, "safe_swap", real_swap)
+        monkeypatch.setattr(store, "safe_swap", real_swap)
         # foreachBatch replays batch 1 after the crash (checkpoint never
         # committed); the ratchet sees totals still at batch 0
         sink(b1, 1)
@@ -3007,7 +3008,8 @@ class TestCorpusStatsSink:
         import pyarrow as pa
         import pyarrow.parquet as pq_
 
-        from spark_binlog_spark.streaming.corpus_stats import run_corpus_stats
+        from spark_binlog_spark.streaming.corpus_stats import CorpusStatsSink
+        from spark_binlog_spark.streaming.runner import run_files
 
         docs_dir = tmp_path / "docs"
         docs_dir.mkdir()
@@ -3024,13 +3026,14 @@ class TestCorpusStatsSink:
 
         write_batch("b0.parquet", [(0, "a b", "s0"), (1, "c", "s1")])
         schema = spark.read.parquet(str(docs_dir)).schema
-        args = (spark, str(docs_dir), str(tmp_path / "stats"), str(tmp_path / "ck"), schema)
-        sink = run_corpus_stats(*args)
+        args = (spark, str(docs_dir), schema, str(tmp_path / "ck"))
+        sink = run_files(*args, CorpusStatsSink(spark, str(tmp_path / "stats")))
         got = {r["source"]: r["n_tokens"] for r in sink.current().collect()}
         assert got == {"s0": 2, "s1": 1}
 
         write_batch("b1.parquet", [(2, "d e f", "s0"), (3, "g h", "s2")])
-        sink = run_corpus_stats(*args)  # restart on the same checkpoint
+        # restart on the same checkpoint
+        sink = run_files(*args, CorpusStatsSink(spark, str(tmp_path / "stats")))
         got = {r["source"]: (r["n_docs"], r["n_tokens"]) for r in sink.current().collect()}
         assert got == {"s0": (2, 5), "s1": (1, 1), "s2": (1, 2)}
 
@@ -3646,7 +3649,10 @@ class TestSketchSinks:
                      text=" ".join(["w"] * (i % 7 + 1))) for i in ids]
             )
 
-        sink = PrioritySampleSink(spark, str(tmp_path / "prio"), k=8)
+        class Sink(PrioritySampleSink):
+            k = 8
+
+        sink = Sink(spark, str(tmp_path / "prio"))
         b0 = docs(range(0, 30))
         sink(b0, 0)
         sink(b0, 0)  # replay after a crash between swap and commit

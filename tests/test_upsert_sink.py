@@ -1,10 +1,10 @@
 """The flagship copy-on-write sink (``ParquetUpsertSink`` behind
 ``run_cdc_upsert``): a crash at every filesystem step of one batch
 commit must resume to the one-shot ``cdc_apply`` result, and neither
-the stream nor a batch apply may leave a persisted RDD behind."""
+the stream, a batch apply nor a merge-on-read read or compaction may
+leave a persisted RDD behind."""
 
 import os
-import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_TEST
+from tests.conftest import SF_TEST, _CrashAt
 
 T0 = 1_700_000_000_000_000_000  # ns
 TYPES = ["signup", "click", "view", "purchase", "error"]
@@ -40,10 +40,8 @@ def _base(spark):
     )
 
 
-def _expected(spark, base, path):
-    from spark_binlog_spark.operators import cdc_apply
-
-    ch = spark.read.parquet(path).select(
+def _changes(spark, path):
+    return spark.read.parquet(path).select(
         F.col("event_id").alias("cdc_offset"),
         F.col("user_id").alias("pk"),
         F.when(F.col("event_type") == "signup", "insert")
@@ -52,33 +50,15 @@ def _expected(spark, base, path):
         .alias("op"),
         F.col("value"),
     )
-    applied = cdc_apply(base, ch, key_col="c_custkey", set_cols={"c_acctbal": "value"})
+
+
+def _expected(spark, base, path):
+    from spark_binlog_spark.operators import cdc_apply
+
+    applied = cdc_apply(
+        base, _changes(spark, path), key_col="c_custkey", set_cols={"c_acctbal": "value"}
+    )
     return {(r["c_custkey"], r["c_acctbal"]) for r in applied.collect()}
-
-
-class _CrashAt:
-    """Makes the ``step``-th ``shutil.move``/``shutil.rmtree`` call made
-    while armed raise, as a crash at that step of a batch commit."""
-
-    def __init__(self, monkeypatch):
-        self.step = self.calls = 0
-        self.armed = self.fired = False
-        for name in ("move", "rmtree"):
-            monkeypatch.setattr(shutil, name, self._wrap(getattr(shutil, name)))
-
-    def reset(self, step):
-        self.step, self.calls, self.fired = step, 0, False
-
-    def _wrap(self, real):
-        def call(*args, **kwargs):
-            if self.armed:
-                self.calls += 1
-                if self.calls == self.step:
-                    self.fired = True
-                    raise OSError(f"injected crash at commit step {self.step}")
-            return real(*args, **kwargs)
-
-        return call
 
 
 class TestCommitCrashMatrix:
@@ -163,4 +143,21 @@ class TestCacheHygiene:
         assert jsc.getPersistentRDDs().size() == start
 
         q_cdc_apply(spark, SF_TEST).collect()
+        assert jsc.getPersistentRDDs().size() == start
+
+    def test_merge_on_read_read_and_compact_release_persisted_rdds(self, spark, tmp_path):
+        from spark_binlog_spark.streaming.mor import MergeOnReadSink
+
+        jsc = spark.sparkContext._jsc
+        start = jsc.getPersistentRDDs().size()
+        path = str(tmp_path / "ev.parquet")
+        _write_events(path)
+        sink = MergeOnReadSink(
+            spark, str(tmp_path / "state"), _base(spark), "c_custkey", {"c_acctbal": "value"},
+            compact_every=100,
+        )
+        sink(_changes(spark, path), 0)
+        sink.current().collect()
+        assert jsc.getPersistentRDDs().size() == start
+        sink.compact()
         assert jsc.getPersistentRDDs().size() == start
