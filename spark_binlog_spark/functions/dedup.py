@@ -652,6 +652,16 @@ def decontaminate(
     return hits.join(sizes, "doc_id").select("doc_id", "n_hits", "n_grams", c4)
 
 
+def _release_checkpoints(*dfs: DataFrame) -> None:
+    """Free superseded ``localCheckpoint`` rounds of an iterative loop.
+    ``DataFrame.unpersist`` does not reach a checkpoint's blocks: they
+    belong to the checkpointed RDD under the plan's ``LogicalRDD``
+    node, so that RDD is unpersisted.  Call only once the next round's
+    checkpoint has materialized; nothing may read these rounds after."""
+    for df in dfs:
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def min_label_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") -> DataFrame:
     """Connected components over an undirected pair graph by min-label
     propagation TO A FIXPOINT: a driver loop over shuffle-once rounds
@@ -671,12 +681,12 @@ def min_label_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") -
     checkpoint is LAZY and the probe collect materializes it — ONE job
     per round, not a checkpoint job plus a probe job (folding the two
     measured 5.5 -> ~3 s at sf0.1, where the per-job floor dominates).
-    The checkpoint truncates lineage to the materialized round;
-    superseded rounds' cache blocks are reclaimed by Spark's
-    ContextCleaner once the old DataFrame is unreferenced.  Near-dup
-    graphs are shallow, so rounds stay single-digit; for adversarially
-    deep graphs the classic alternative is large-star/small-star (more
-    shuffle per round, O(log n) rounds).
+    The checkpoint truncates lineage to the materialized round, and
+    the superseded round's checkpoint is released once the next one has
+    materialized (``_release_checkpoints``): only the returned labels
+    stay persisted.  Near-dup graphs are shallow, so rounds stay
+    single-digit; for adversarially deep graphs the classic alternative
+    is large-star/small-star (more shuffle per round, O(log n) rounds).
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -699,6 +709,7 @@ def min_label_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") -
             .groupBy("src")
             .agg(F.min("lbl").alias("nb_min"))
         )
+        prev = labels
         labels = (
             labels.join(neigh, labels["v"] == neigh["src"], "left")
             .select(
@@ -708,6 +719,7 @@ def min_label_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") -
             .localCheckpoint(eager=False)
         )
         cur_sum = labels.agg(probe).collect()[0][0]
+        _release_checkpoints(prev)
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
@@ -835,7 +847,8 @@ def jump_label_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") 
 
     Each round ``localCheckpoint``s lazily and the probe count
     materializes it (min_label's one-job-per-round pattern); the
-    checkpoint stops the analyzer from re-nesting prior rounds."""
+    checkpoint stops the analyzer from re-nesting prior rounds, and the
+    rounds it supersedes are released right after it materializes."""
     from pyspark.storagelevel import StorageLevel
 
     edges = (
@@ -866,7 +879,7 @@ def jump_label_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") 
     # round); the hook is SEQUENTIALLY composed with the jump (jump
     # runs on post-hook labels), which cut the 2.45M-edge star graph
     # from 6 changing rounds (parallel form) to 4.
-    delta = labels
+    delta = ck = labels
     while True:
         nb = (
             edges.join(delta, edges["dst"] == delta["v"])
@@ -898,6 +911,10 @@ def jump_label_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") 
             .localCheckpoint(eager=False)
         )
         n_changed = new_labels.where("__chg").count()  # materializes the round
+        # the previous round (or the seed) and this round's hooked
+        # labels are now only read through new_labels
+        _release_checkpoints(hooked, ck)
+        ck = new_labels
         labels = new_labels.select("v", "lbl")
         delta = new_labels.where("__chg").select("v", "lbl")
         if n_changed == 0:

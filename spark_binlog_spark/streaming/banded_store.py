@@ -1,18 +1,23 @@
 """Bucketed append-only delta store shared by the streaming admission
-sinks (MinHash text near-dup, sign-LSH embedding near-dup).
+sinks (exact fingerprint, MinHash, SimHash, sign-LSH embedding), plus
+the ``AdmissionSink`` shell they share.
 
 Layout: signature rows live under ``d_<delta>/bucket=K`` where K is the
 sink's probe-key hash mod ``n_buckets`` — the probe key IS the bucket
 key, so per-batch admission reads ONLY the bucket dirs the batch's own
 signatures hash into (read I/O O(index ∩ batch buckets), write I/O
-O(admitted batch); nothing is ever rewritten).
+O(admitted batch); nothing is ever rewritten).  This is the bounded-
+recovery idea of the reference's per-key WAL map: recovery touches one
+key's queue, never the whole WAL (OriginalSourceServerInExecutor.scala:
+31-43).  The driver collects at most ``n_buckets`` scalars per batch to
+plan the pruned read — never data rows.
 
 Publish protocol (exactly-once under foreachBatch's at-least-once):
 the batch's rows are written bucket-partitioned into an ``_aside*``
-dir and published with ONE ``os.replace`` directory rename (unique
-name per attempt), so a crash mid-publish leaves nothing visible and
-the replay recomputes the identical admitted set.  ``_aside*`` debris
-and crashed-compaction ``.tmp`` files are swept at construction.
+dir and published with ONE directory rename (unique name per attempt),
+so a crash mid-publish leaves nothing visible and the replay recomputes
+the identical admitted set.  ``_aside*`` debris is swept at
+construction.
 
 Compaction is a DISTRIBUTED Spark job — every over-threshold bucket's
 files are read as one DataFrame, ``repartition("bucket")`` gives one
@@ -32,8 +37,9 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from spark_binlog_spark.streaming.swap import remove_with_checksum
 
@@ -64,9 +70,6 @@ class BucketedDeltaStore:
         # nothing of that attempt is visible — drop the debris
         for leftover in [p for p in os.listdir(store_dir) if p.startswith("_aside")]:
             shutil.rmtree(os.path.join(store_dir, leftover), ignore_errors=True)
-        # ...and a crashed legacy compaction leaves a hidden .tmp file
-        for tmp in glob.glob(os.path.join(store_dir, "d_*", "bucket=*", "_*.tmp")):
-            os.remove(tmp)
         # a crash between a compaction's file deletes and its dir prune
         # leaves empty dirs — sweep them on resume
         self.prune_empty_dirs()
@@ -197,3 +200,90 @@ class BucketedDeltaStore:
         for ddir in glob.glob(os.path.join(self.store_dir, "d_*")):
             if not glob.glob(os.path.join(ddir, "bucket=*")):
                 shutil.rmtree(ddir, ignore_errors=True)
+
+
+class AdmissionSink:
+    """foreachBatch shell shared by the admission sinks: a
+    ``BucketedDeltaStore`` of signature rows that is both the admitted
+    set and the index the next batch is checked against.
+
+    A subclass declares ``schema`` (DDL of the stored row, without
+    ``bucket``) and ``id_col``, implements ``_key()`` (the probe key of
+    a stored row; its bucket is ``key % n_buckets``) and ``__call__``,
+    which computes the admitted rows and hands them to ``_admit``.  It
+    keeps its signatures, reject joins and serving methods."""
+
+    schema: str
+    id_col = "doc_id"
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        store_dir: str,
+        n_buckets: int = 16,
+        compact_threshold: int = 8,
+    ):
+        self.spark = spark
+        self.store_dir = store_dir
+        self.n_buckets = n_buckets
+        self.store = BucketedDeltaStore(
+            spark, store_dir, self.schema, n_buckets, compact_threshold
+        )
+        self._cols = StructType.fromDDL(self.schema).names
+        self.admitted_batches: list[tuple[int, int]] = []  # (batch_id, n_admitted)
+
+    @property
+    def admitted_rows(self) -> int:
+        return sum(n for _, n in self.admitted_batches)
+
+    @property
+    def scan_stats(self) -> list[tuple[int, int, int]]:
+        return self.store.scan_stats
+
+    @property
+    def n_compactions(self) -> int:
+        return self.store.n_compactions
+
+    def index(self) -> DataFrame:
+        """Every stored signature row."""
+        return self.store.read_all()
+
+    def accepted(self) -> DataFrame:
+        """Admitted ids (distinct over the index)."""
+        return self.index().select(self.id_col).distinct()
+
+    def _key(self) -> Column:
+        raise NotImplementedError
+
+    def _bucket_of(self, key: Column) -> Column:
+        return F.pmod(key, F.lit(self.n_buckets)).cast("int")
+
+    def _buckets(self, df: DataFrame, *keys: Column) -> list[int]:
+        """The buckets ``df``'s probe keys (default: a stored row's own
+        key) hash into: <= n_buckets scalars to the driver, a plan
+        step, not data."""
+        bs = [self._bucket_of(k) for k in keys or [self._key()]]
+        b = bs[0] if len(bs) == 1 else F.explode(F.array(*bs))
+        return sorted(r[0] for r in df.select(b.alias("b")).distinct().collect())
+
+    def _count(self, rows: DataFrame) -> int:
+        """Admitted ids among a batch's stored rows."""
+        return rows.select(self.id_col).distinct().count()
+
+    def _admit(self, rows: DataFrame, batch_id: int, buckets: list[int]) -> None:
+        """Publish the admitted rows as one delta, record the batch,
+        then compact the buckets it touched (only those can have
+        grown)."""
+        rows = rows.select(
+            *self._cols, self._bucket_of(self._key()).alias("bucket")
+        ).persist()
+        try:
+            n = self._count(rows)
+            if n == 0:
+                self.admitted_batches.append((batch_id, 0))
+                return
+            self.store.publish(rows, self._cols, batch_id)
+            self.admitted_batches.append((batch_id, n))
+            self.store.maybe_compact(buckets)
+        finally:
+            rows.unpersist()

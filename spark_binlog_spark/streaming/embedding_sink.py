@@ -31,12 +31,12 @@ norm^2 exceeds 2^53 and the float sqrt rounds above the exact norm)
 >= min_cosine4 and admits nothing — which is why ``min_cosine4 <
 10000`` (strictly below the self-cosine) is enforced.
 
-Scale — same as the MinHash sink: rows live under
-``d_b<batch>_<attempt>/bucket=K`` with ``K = (31*sbucket + tbl) %
-n_buckets`` (the probe key IS the bucket key), so per-batch read I/O
-is O(index ∩ batch buckets) and write I/O O(admitted batch).  The
-batch side of the band join is broadcast; the index slice is never
-shuffled; compaction is a distributed Spark job (banded_store.py).
+Scale — same as the MinHash sink: rows live under ``d_*/bucket=K``
+with ``K = (31*sbucket + tbl) % n_buckets`` (the probe key IS the
+bucket key), so per-batch read I/O is O(index ∩ batch buckets) and
+write I/O O(admitted batch).  The batch side of the band join is
+broadcast; the index slice is never shuffled; compaction is a
+distributed Spark job (banded_store.py).
 ``planes=None`` derives the plane count from the corpus via
 ``derived_planes`` so in-bucket populations stay bounded as the
 stream grows.
@@ -47,7 +47,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_binlog_spark.functions.similarity import (
@@ -58,16 +58,16 @@ from spark_binlog_spark.functions.similarity import (
     sign_bucket,
     with_quantized,
 )
-from spark_binlog_spark.streaming.banded_store import BucketedDeltaStore
-
-SIG_COLS = ["vec_id", "tbl", "sbucket", "q", "norm"]
-SIG_SCHEMA = "vec_id long, tbl int, sbucket int, q array<long>, norm long"
+from spark_binlog_spark.streaming.banded_store import AdmissionSink
 
 
-class EmbeddingNearDupIngestSink:
+class EmbeddingNearDupIngestSink(AdmissionSink):
     """foreachBatch sink: admit only vectors that are not cosine
     near-duplicates of anything admitted so far (reference-free
     training-data-pipeline machinery, like the text sinks)."""
+
+    schema = "vec_id long, tbl int, sbucket int, q array<long>, norm long"
+    id_col = "vec_id"
 
     def __init__(
         self,
@@ -90,17 +90,11 @@ class EmbeddingNearDupIngestSink:
                 "min_cosine4 must be < 10000 (strictly below the "
                 "self-cosine) for replay idempotence"
             )
-        self.spark = spark
-        self.store_dir = store_dir
+        super().__init__(spark, store_dir, n_buckets, compact_threshold)
         self.min_cosine4 = min_cosine4
         self.planes = planes
         self.n_tables = n_tables
         self.vec_col = vec_col
-        self.n_buckets = n_buckets
-        self.store = BucketedDeltaStore(
-            spark, store_dir, SIG_SCHEMA, n_buckets, compact_threshold
-        )
-        self.admitted_batches: list[tuple[int, int]] = []  # (batch_id, n_admitted)
         # the plane count is an INDEX property, not a batch property:
         # every batch (and every restart, and search_topk) must bucket
         # with the SAME planes or (tbl, sbucket) keys stop being
@@ -113,25 +107,8 @@ class EmbeddingNearDupIngestSink:
             with open(self._planes_meta) as fh:
                 self._planes_resolved = int(json.load(fh)["planes"])
 
-    @property
-    def admitted_rows(self) -> int:
-        return sum(n for _, n in self.admitted_batches)
-
-    @property
-    def scan_stats(self) -> list[tuple[int, int, int]]:
-        return self.store.scan_stats
-
-    @property
-    def n_compactions(self) -> int:
-        return self.store.n_compactions
-
-    def index(self) -> DataFrame:
-        """Full bucket index (every admitted vector × n_tables rows)."""
-        return self.store.read_all()
-
-    def accepted(self) -> DataFrame:
-        """Admitted vec_ids (distinct over the bucket index)."""
-        return self.index().select("vec_id").distinct()
+    def _key(self) -> Column:
+        return 31 * F.col("sbucket") + F.col("tbl")
 
     def search_topk(self, queries_df: DataFrame, k: int = 5) -> DataFrame:
         """ANN search served directly off the published bucket index:
@@ -226,7 +203,7 @@ class EmbeddingNearDupIngestSink:
         )
         return base.select(
             "vec_id", "q", "norm", F.posexplode(tables).alias("tbl", "sbucket")
-        ).select(*SIG_COLS)
+        ).select(*self._cols)
 
     @staticmethod
     def _cos4(qa, na, qb, nb):
@@ -245,17 +222,7 @@ class EmbeddingNearDupIngestSink:
             return
         sig = self._signatures(batch_df).persist()
         try:
-            # ≤ n_buckets scalars to the driver — a plan step, not data
-            buckets = sorted(
-                r[0]
-                for r in sig.select(
-                    F.pmod(31 * F.col("sbucket") + F.col("tbl"), F.lit(self.n_buckets))
-                    .cast("int")
-                    .alias("b")
-                )
-                .distinct()
-                .collect()
-            )
+            buckets = self._buckets(sig)
             index_slice = self.store.slice_for(buckets, batch_id)
             bsig = F.broadcast(
                 sig.select(
@@ -310,26 +277,9 @@ class EmbeddingNearDupIngestSink:
                 .select(F.col("vb").alias("vec_id"))
                 .distinct()
             )
-            admitted = (
-                sig.join(idx_reject, "vec_id", "left_anti")
-                .join(inb_reject, "vec_id", "left_anti")
-                .withColumn(
-                    "bucket",
-                    F.pmod(31 * F.col("sbucket") + F.col("tbl"), F.lit(self.n_buckets))
-                    .cast("int"),
-                )
-                .persist()
+            admitted = sig.join(idx_reject, "vec_id", "left_anti").join(
+                inb_reject, "vec_id", "left_anti"
             )
-            try:
-                n_vecs = admitted.select("vec_id").distinct().count()
-                if n_vecs == 0:
-                    self.admitted_batches.append((batch_id, 0))
-                    return
-                self.store.publish(admitted, SIG_COLS, batch_id)
-                self.admitted_batches.append((batch_id, n_vecs))
-                # only the buckets this batch touched can have grown
-                self.store.maybe_compact(buckets)
-            finally:
-                admitted.unpersist()
+            self._admit(admitted, batch_id, buckets)
         finally:
             sig.unpersist()

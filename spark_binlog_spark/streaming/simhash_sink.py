@@ -20,7 +20,7 @@ Exactly-once: foreachBatch is at-least-once; publication is atomic
 per batch via the store.  A replayed already-published batch
 self-matches at hamming 0 <= max_hamming and admits nothing.
 
-Scale: rows live under ``d_b<batch>_<attempt>/bucket=K`` with
+Scale: rows live under ``d_*/bucket=K`` with
 ``K = (band_val * bands + band_idx) % n_buckets`` — the probe key IS
 the bucket key, so per-batch read I/O is O(index ∩ batch buckets).
 The batch side of the band join is broadcast; the index slice never
@@ -29,20 +29,19 @@ shuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_binlog_spark.functions.dedup import simhash
-from spark_binlog_spark.streaming.banded_store import BucketedDeltaStore
-
-SIG_COLS = ["doc_id", "band_idx", "band_val", "simhash16"]
-SIG_SCHEMA = "doc_id long, band_idx int, band_val long, simhash16 long"
+from spark_binlog_spark.streaming.banded_store import AdmissionSink
 
 
-class SimHashIngestSink:
+class SimHashIngestSink(AdmissionSink):
     """foreachBatch sink: admit only documents that are not SimHash
     near-duplicates (hamming <= max_hamming) of anything admitted so
     far."""
+
+    schema = "doc_id long, band_idx int, band_val long, simhash16 long"
 
     def __init__(
         self,
@@ -61,62 +60,21 @@ class SimHashIngestSink:
             )
         if bits % bands != 0:
             raise ValueError("bands must evenly divide bits")
-        self.spark = spark
-        self.store_dir = store_dir
+        super().__init__(spark, store_dir, n_buckets, compact_threshold)
         self.max_hamming = max_hamming
         self.bits = bits
         self.bands = bands
-        self.n_buckets = n_buckets
-        self.store = BucketedDeltaStore(
-            spark, store_dir, SIG_SCHEMA, n_buckets, compact_threshold
-        )
-        self.admitted_batches: list[tuple[int, int]] = []  # (batch_id, n_admitted)
 
-    @property
-    def admitted_rows(self) -> int:
-        return sum(n for _, n in self.admitted_batches)
+    def _key(self, band_idx: Column | None = None, band_val: Column | None = None) -> Column:
+        """Probe key of a (band_idx, band_val) pair; a stored row's own
+        columns by default."""
+        if band_idx is None:
+            band_idx, band_val = F.col("band_idx"), F.col("band_val")
+        return band_val * self.bands + band_idx
 
-    @property
-    def scan_stats(self) -> list[tuple[int, int, int]]:
-        return self.store.scan_stats
-
-    @property
-    def n_compactions(self) -> int:
-        return self.store.n_compactions
-
-    def index(self) -> DataFrame:
-        return self.store.read_all()
-
-    def accepted(self) -> DataFrame:
-        return self.index().select("doc_id").distinct()
-
-    def _bucket(self, band_idx, band_val):
-        return F.pmod(band_val * self.bands + band_idx, F.lit(self.n_buckets)).cast(
-            "int"
-        )
-
-    def _signatures(self, batch_df: DataFrame) -> DataFrame:
+    def _band(self, sig: Column, i: int) -> Column:
         width = self.bits // self.bands
-        mask = (1 << width) - 1
-        sig = simhash(batch_df, bits=self.bits)
-        banded = F.array(
-            *[
-                F.struct(
-                    F.lit(i).cast("int").alias("band_idx"),
-                    F.shiftright(F.col("simhash16"), i * width)
-                    .bitwiseAND(F.lit(mask))
-                    .cast("long")
-                    .alias("band_val"),
-                )
-                for i in range(self.bands)
-            ]
-        )
-        return sig.select("doc_id", "simhash16", F.explode(banded).alias("b")).select(
-            "doc_id",
-            F.col("b.band_idx").alias("band_idx"),
-            F.col("b.band_val").alias("band_val"),
-            "simhash16",
-        )
+        return F.shiftright(sig, i * width).bitwiseAND(F.lit((1 << width) - 1)).cast("long")
 
     @staticmethod
     def _hamming(a, b):
@@ -178,25 +136,11 @@ class SimHashIngestSink:
                 F.col("simhash16").bitwiseXOR(F.col("mk")).alias("probe"),
             )
             # buckets any probe's bands map to (the index rows a matching
-            # sig would live in) — <= n_buckets scalars, a plan step
-            width = self.bits // self.bands
-            mask = (1 << width) - 1
-            probe_buckets = probes.select(
-                F.explode(
-                    F.array(
-                        *[
-                            self._bucket(
-                                F.lit(i),
-                                F.shiftright(F.col("probe"), i * width)
-                                .bitwiseAND(F.lit(mask))
-                                .cast("long"),
-                            )
-                            for i in range(self.bands)
-                        ]
-                    )
-                ).alias("b")
+            # sig would live in)
+            buckets = self._buckets(
+                probes,
+                *[self._key(F.lit(i), self._band(F.col("probe"), i)) for i in range(self.bands)],
             )
-            buckets = sorted(r[0] for r in probe_buckets.distinct().collect())
             index_slice = self.store.slice_for(buckets, batch_id)
             idx_sigs = index_slice.select(F.col("simhash16").alias("probe")).distinct()
             hit_sigs = (
@@ -219,46 +163,26 @@ class SimHashIngestSink:
                 .filter(F.col("canon") >= F.col("doc_id"))
                 .select("doc_id", "simhash16")
             )
-            admitted = (
-                self._signatures_from_flat(admitted_docs)
-                .withColumn("bucket", self._bucket(F.col("band_idx"), F.col("band_val")))
-                .persist()
-            )
-            try:
-                n_docs = admitted.select("doc_id").distinct().count()
-                if n_docs == 0:
-                    self.admitted_batches.append((batch_id, 0))
-                    return
-                self.store.publish(admitted, SIG_COLS, batch_id)
-                self.admitted_batches.append((batch_id, n_docs))
-                self.store.maybe_compact(buckets)
-            finally:
-                admitted.unpersist()
+            self._admit(self._banded(admitted_docs), batch_id, buckets)
         finally:
             flat.unpersist()
 
-    def _signatures_from_flat(self, flat: DataFrame) -> DataFrame:
-        """Banded rows from a precomputed (doc_id, simhash16) relation
-        (same output shape as ``_signatures``)."""
-        width = self.bits // self.bands
-        mask = (1 << width) - 1
+    def _signatures(self, batch_df: DataFrame) -> DataFrame:
+        return self._banded(simhash(batch_df, bits=self.bits))
+
+    def _banded(self, flat: DataFrame) -> DataFrame:
+        """One stored row per band of each (doc_id, simhash16)."""
         banded = F.array(
             *[
                 F.struct(
                     F.lit(i).cast("int").alias("band_idx"),
-                    F.shiftright(F.col("simhash16"), i * width)
-                    .bitwiseAND(F.lit(mask))
-                    .cast("long")
-                    .alias("band_val"),
+                    self._band(F.col("simhash16"), i).alias("band_val"),
                 )
                 for i in range(self.bands)
             ]
         )
         return flat.select("doc_id", "simhash16", F.explode(banded).alias("b")).select(
-            "doc_id",
-            F.col("b.band_idx").alias("band_idx"),
-            F.col("b.band_val").alias("band_val"),
-            "simhash16",
+            "doc_id", "b.band_idx", "b.band_val", "simhash16"
         )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -268,15 +192,7 @@ class SimHashIngestSink:
             return
         sig = self._signatures(batch_df).persist()
         try:
-            # ≤ n_buckets scalars to the driver — a plan step, not data
-            buckets = sorted(
-                r[0]
-                for r in sig.select(
-                    self._bucket(F.col("band_idx"), F.col("band_val")).alias("b")
-                )
-                .distinct()
-                .collect()
-            )
+            buckets = self._buckets(sig)
             index_slice = self.store.slice_for(buckets, batch_id)
             bsig = F.broadcast(
                 sig.select(
@@ -320,23 +236,9 @@ class SimHashIngestSink:
                 .select(F.col("db").alias("doc_id"))
                 .distinct()
             )
-            admitted = (
-                sig.join(idx_reject, "doc_id", "left_anti")
-                .join(inb_reject, "doc_id", "left_anti")
-                .withColumn(
-                    "bucket", self._bucket(F.col("band_idx"), F.col("band_val"))
-                )
-                .persist()
+            admitted = sig.join(idx_reject, "doc_id", "left_anti").join(
+                inb_reject, "doc_id", "left_anti"
             )
-            try:
-                n_docs = admitted.select("doc_id").distinct().count()
-                if n_docs == 0:
-                    self.admitted_batches.append((batch_id, 0))
-                    return
-                self.store.publish(admitted, SIG_COLS, batch_id)
-                self.admitted_batches.append((batch_id, n_docs))
-                self.store.maybe_compact(buckets)
-            finally:
-                admitted.unpersist()
+            self._admit(admitted, batch_id, buckets)
         finally:
             sig.unpersist()

@@ -64,14 +64,16 @@ def duck():
 
 
 class _CrashAt:
-    """Makes the ``step``-th ``shutil.move``/``shutil.rmtree`` call made
-    while armed raise, as a crash at that step of a batch commit."""
+    """Makes the ``step``-th call, while armed, to any of the wrapped
+    functions raise, as a crash at that step of a batch commit.
+    ``targets`` names them as ``(module, attribute)`` pairs; the default
+    is ``shutil.move`` and ``shutil.rmtree``."""
 
-    def __init__(self, monkeypatch):
+    def __init__(self, monkeypatch, targets=((shutil, "move"), (shutil, "rmtree"))):
         self.step = self.calls = 0
         self.armed = self.fired = False
-        for name in ("move", "rmtree"):
-            monkeypatch.setattr(shutil, name, self._wrap(getattr(shutil, name)))
+        for mod, name in targets:
+            monkeypatch.setattr(mod, name, self._wrap(getattr(mod, name)))
 
     def reset(self, step):
         self.step, self.calls, self.fired = step, 0, False

@@ -23,6 +23,12 @@ class TestArgumentContracts:
         with pytest.raises(ValueError, match="min_agree"):
             dedup.minhash_pairs_from_wide(wide, n_hashes=2, min_agree=1)
 
+    def test_neardup_sink_min_agree_one_rejected(self, spark, tmp_path):
+        from spark_binlog_spark.streaming.neardup_sink import NearDupIngestSink
+
+        with pytest.raises(ValueError, match="min_agree"):
+            NearDupIngestSink(spark, str(tmp_path / "store"), min_agree=1)
+
     def test_simhash_bits_over_60_rejected(self, spark):
         df = spark.createDataFrame([(0, "a b")], "doc_id long, text string")
         with pytest.raises(ValueError, match="bits"):

@@ -75,9 +75,7 @@ def _median(xs):
 
 
 def _assert_flat_and_bounded(label, sink, per_batch, n_files_final, n_rows):
-    store = getattr(sink, "store", sink)  # DedupIngestSink manages its own dir
-    threshold = getattr(store, "compact_threshold", None) or sink.compact_threshold
-    n_buckets = getattr(store, "n_buckets", None) or sink.n_buckets
+    threshold, n_buckets = sink.store.compact_threshold, sink.store.n_buckets
     # 1a. deterministic flatness: every admission scan's file opens are
     # bounded by compaction, independent of batch count
     for bid, nb, nf in sink.scan_stats:
@@ -136,7 +134,7 @@ class TestSinkSoak:
         per_batch = _drive(sink, batches)
         # scan_stats here is (batch_id, buckets, files) on the sink itself
         _assert_flat_and_bounded(
-            "dedup_exact", sink, per_batch, len(sink.store_files()), n_rows
+            "dedup_exact", sink, per_batch, len(sink.store.all_files()), n_rows
         )
         # 3. batch recompute: smallest doc_id per fingerprint, full corpus
         w = Window.partitionBy("fp_md5").orderBy("doc_id")
@@ -234,10 +232,7 @@ class TestSinkSoak:
         store, and final index == batch-recomputed signatures of the
         survivors, with no surviving near-pair (banded candidates at
         >= min_cosine4) left in the index."""
-        from spark_binlog_spark.streaming.embedding_sink import (
-            SIG_COLS,
-            EmbeddingNearDupIngestSink,
-        )
+        from spark_binlog_spark.streaming.embedding_sink import EmbeddingNearDupIngestSink
 
         emb = spark.read.parquet(f"{SOAK_SF_DIR}/embeddings.parquet").select(
             "vec_id", "embedding"
@@ -259,7 +254,7 @@ class TestSinkSoak:
         )
         # 3a. store integrity: recomputed signatures of the survivors
         admitted = emb.join(sink.accepted(), "vec_id", "semi")
-        expected = sink._signatures(admitted).select(*SIG_COLS)
+        expected = sink._signatures(admitted)
         _sets_equal(
             sink.index().dropDuplicates(), expected, "embedding_neardup index"
         )

@@ -1556,9 +1556,9 @@ class TestDedupIngestSink:
             ),
             0,
         )
-        total_files = len(sink.store_files())
+        total_files = len(sink.store.all_files())
         assert total_files >= 8  # the store really is spread over buckets
-        occupied = {os.path.basename(os.path.dirname(f)) for f in sink.store_files()}
+        occupied = {os.path.basename(os.path.dirname(f)) for f in sink.store.all_files()}
         assert len(occupied) >= 8 and all(d.startswith("bucket=") for d in occupied)
 
         # batch 1: ONE new doc + ONE dup of doc 3 → at most 2 buckets touched
@@ -1578,8 +1578,9 @@ class TestDedupIngestSink:
         assert 100 in {r["doc_id"] for r in sink.accepted().collect()}
         assert 101 not in {r["doc_id"] for r in sink.accepted().collect()}
 
-        # publish only ever touches the batch's own buckets
-        b1_files = [f for f in sink.store_files() if os.path.basename(f).startswith("b1-")]
+        # publish only ever touches the batch's own buckets: batch 1's
+        # delta spans one bucket dir
+        b1_files = glob.glob(os.path.join(store, "d_b1_*", "bucket=*", "*.parquet"))
         assert len({os.path.dirname(f) for f in b1_files}) == 1
 
     def test_crash_mid_publish_replay_preserves_published_prefix(self, spark, tmp_path):
@@ -1600,6 +1601,77 @@ class TestDedupIngestSink:
             7,
         )
         assert {r["doc_id"] for r in sink2.accepted().collect()} == {1, 2}
+
+
+    def test_crash_at_every_commit_step_converges(self, spark, tmp_path, monkeypatch):
+        """For k = 1, 2, ...: crash batch 1's commit at its k-th
+        filesystem step (publish rename, compaction rename, file
+        deletes, directory prunes), open a fresh sink on the same
+        directory, replay batch 1 and feed batch 2; the accepted set
+        must equal the no-crash run's.  With 2 buckets and a threshold
+        of 2, batch 1's commit publishes, compacts and prunes.  The
+        loop ends at the first k the commit no longer reaches."""
+        import glob
+        import hashlib
+        import shutil
+
+        from spark_binlog_spark.streaming.dedup_sink import DedupIngestSink
+        from tests.conftest import _CrashAt
+
+        # fp48 is the first 12 hex digits of the text's md5: keep every
+        # document in bucket 0, so the commit takes few steps
+        texts = [
+            t for t in (f"crash matrix doc {i}" for i in range(40))
+            if int(hashlib.md5(t.encode()).hexdigest()[:12], 16) % 2 == 0
+        ]
+
+        def batch(ids, dup=None):
+            rows = [(i, texts[i]) for i in ids] + ([(100, texts[dup])] if dup is not None else [])
+            return spark.createDataFrame(rows, "doc_id long, text string")
+
+        b0, b1, b2 = batch([0, 1]), batch([2, 3], dup=0), batch([4], dup=2)
+
+        def make(path):
+            return DedupIngestSink(spark, path, n_buckets=2, compact_threshold=2)
+
+        def accepted(sink):
+            return sorted(map(tuple, sink.accepted().collect()))
+
+        ref = make(str(tmp_path / "ref"))
+        for bid, b in enumerate([b0, b1, b2]):
+            ref(b, bid)
+        want = accepted(ref)
+        assert [r[0] for r in want] == [0, 1, 2, 3, 4]
+        seed = str(tmp_path / "seed")
+        make(seed)(b0, 0)
+        crash = _CrashAt(
+            monkeypatch,
+            [(shutil, "move"), (shutil, "rmtree"), (os, "rename"), (os, "replace"), (os, "remove")],
+        )
+        step = 0
+        while True:
+            step += 1
+            assert step <= 16, "a batch commit should take a handful of filesystem steps"
+            path = str(tmp_path / f"step{step}")
+            shutil.copytree(seed, path)
+            sink = make(path)
+            crash.reset(step)
+            crash.armed = True
+            try:
+                sink(b1, 1)
+            except OSError:
+                pass
+            finally:
+                crash.armed = False
+            if not crash.fired:
+                break
+            resumed = make(path)  # restart: sweep, then replay batch 1
+            resumed(b1, 1)
+            resumed(b2, 2)
+            assert accepted(resumed) == want, f"crash at commit step {step}"
+            assert not glob.glob(os.path.join(path, "_aside*")), f"step {step}"
+        assert sink.n_compactions == 1
+        assert step > 6, "expected publish, compaction and prune steps"
 
 
 class TestNearDupIngestSink:
@@ -2401,7 +2473,7 @@ class TestDistributedCompaction:
         assert sink.accepted().count() == sink.admitted_rows == 24
         # each bucket's fragments stay below the threshold steady-state
         for b in range(2):
-            n = len(glob.glob(os.path.join(store, f"bucket={b}", "*.parquet")))
+            n = len(glob.glob(os.path.join(store, "d_*", f"bucket={b}", "*.parquet")))
             assert n <= 3 + 1, f"bucket {b} holds {n} files after compaction"
 
         store2 = str(tmp_path / "store2")

@@ -697,6 +697,30 @@ class TestMinLabelComponents:
         }
         assert got == want
 
+    @pytest.mark.parametrize("fn", ["jump", "min_label", "adaptive"])
+    def test_component_loops_release_superseded_checkpoints(self, spark, fn):
+        """Each fixpoint round localCheckpoints its labels; once the next
+        round has materialized, the superseded ones must be released.
+        After one run over a 16-vertex path and a triangle only the
+        returned labels stay persisted, and they still equal the
+        union-find oracle."""
+        from pyspark.sql import Row
+
+        from spark_binlog_spark.functions import dedup
+
+        run = {
+            "jump": dedup.jump_label_components,
+            "min_label": dedup.min_label_components,
+            "adaptive": lambda p: dedup.adaptive_components(p, driver_max_edges=0),
+        }[fn]
+        edges = [(i + 1, i) for i in range(15)] + [(50, 51), (51, 52), (50, 52)]
+        pairs = spark.createDataFrame([Row(doc_a=u, doc_b=v) for u, v in edges])
+        jsc = spark.sparkContext._jsc
+        start = jsc.getPersistentRDDs().size()
+        got = {r["doc_id"]: r["component"] for r in run(pairs).collect()}
+        assert got == self._union_find(edges)
+        assert jsc.getPersistentRDDs().size() <= start + 1
+
     def test_jump_label_deep_path_converges_in_log_rounds(self, spark):
         """The pointer-jump claim itself: a 128-node path (diameter
         127) must converge in ~log2(d) label rounds — min-label would
