@@ -153,12 +153,14 @@ def minhash_signatures_wide(
     tax for a kernel to win back, and the Arrow text transfer eats the
     memoization saving."""
     sh = doc_shingles(spread_small_input(df), text_col)
-    hp = (
-        F.conv(F.substring(F.md5(F.col("shingle")), 1, 12), 16, 10).cast("long") % MINHASH_P
-    ).alias("hp")
-    hashed = sh.select("doc_id", hp)
+    # SQL text, not Column calls: see DEVNOTES "Spark pitfalls" (every
+    # functions call is ~5 py4j round trips under call-site capture)
+    hashed = sh.selectExpr(
+        "doc_id",
+        f"CAST(conv(substring(md5(shingle), 1, 12), 16, 10) AS BIGINT) % {MINHASH_P} AS hp",
+    )
     aggs = [
-        F.min((F.col("hp") * MINHASH_A[i] + MINHASH_B[i]) % MINHASH_P).alias(f"mh{i}")
+        F.expr(f"min((hp * {MINHASH_A[i]} + {MINHASH_B[i]}) % {MINHASH_P}) AS mh{i}")
         for i in range(n_hashes)
     ]
     return hashed.groupBy("doc_id").agg(*aggs)
@@ -230,6 +232,19 @@ def minhash_candidate_pairs(
     return minhash_pairs_from_wide(wide, n_hashes=n_hashes, min_agree=min_agree)
 
 
+def combo_structs(cols: list[str]) -> str:
+    """SQL text of one ``struct(cid, u, v)`` per seed-pair combination
+    ``(i, j)``, ``i < j``, of the wide signature columns ``cols``: the
+    banded rows that both the batch pair join and the streaming
+    admission join explode."""
+    n = len(cols)
+    combos = [(i, j) for i in range(n) for j in range(i + 1, n)]
+    return ", ".join(
+        f"struct({k} AS cid, {cols[i]} AS u, {cols[j]} AS v)"
+        for k, (i, j) in enumerate(combos)
+    )
+
+
 def minhash_pairs_from_wide(
     wide: DataFrame, n_hashes: int = N_MINHASH, min_agree: int = 4
 ) -> DataFrame:
@@ -246,59 +261,36 @@ def minhash_pairs_from_wide(
         )
     cols = [f"mh{i}" for i in range(n_hashes)]
     combos = [(i, j) for i in range(n_hashes) for j in range(i + 1, n_hashes)]
-    banded = wide.select(
-        "doc_id",
-        *cols,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("cid"),
-                        F.col(cols[i]).alias("u"),
-                        F.col(cols[j]).alias("v"),
-                    )
-                    for k, (i, j) in enumerate(combos)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", *cols, F.col("b.cid").alias("cid"), F.col("b.u").alias("u"), F.col("b.v").alias("v"))
+    banded = wide.selectExpr(
+        "doc_id", *cols, f"explode(array({combo_structs(cols)})) AS b"
+    ).selectExpr("doc_id", *cols, "b.cid AS cid", "b.u AS u", "b.v AS v")
     a, b = banded.alias("a"), banded.alias("b")
     # per-seed agreement bitmask: bit c set <=> the pair agrees on seed c
-    mask = sum(
-        (F.col(f"a.{cols[c]}") == F.col(f"b.{cols[c]}")).cast("long") * F.lit(1 << c)
-        for c in range(len(cols))
-    ).alias("mask")
+    mask = " + ".join(
+        f"CAST(a.{c} = b.{c} AS BIGINT) * {1 << k}" for k, c in enumerate(cols)
+    )
     # canonical-combo constants, indexed by cid (1-based for element_at):
     # the row whose combo (i, j) equals the mask's two lowest set bits
     # is the pair's single emitter
-    ival = F.array(*[F.lit(1 << i).cast("long") for (i, _j) in combos])
-    jmask = F.array(*[F.lit((1 << j) - 1).cast("long") for (_i, j) in combos])
+    ival = ", ".join(f"CAST({1 << i} AS BIGINT)" for i, _j in combos)
+    jmask = ", ".join(f"CAST({(1 << j) - 1} AS BIGINT)" for _i, j in combos)
     joined = a.join(
         b,
-        (F.col("a.cid") == F.col("b.cid"))
-        & (F.col("a.u") == F.col("b.u"))
-        & (F.col("a.v") == F.col("b.v"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.col("a.cid").alias("cid"),
-        mask,
-    )
+        F.expr("a.cid = b.cid AND a.u = b.u AND a.v = b.v AND a.doc_id < b.doc_id"),
+    ).selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b", "a.cid AS cid", f"{mask} AS mask")
     return (
-        joined.filter(
-            F.col("mask").bitwiseAND(F.element_at(jmask, F.col("cid") + 1))
-            == F.element_at(ival, F.col("cid") + 1)
+        joined.where(
+            f"mask & element_at(array({jmask}), cid + 1)"
+            f" = element_at(array({ival}), cid + 1)"
         )
-        .select("doc_a", "doc_b", F.bit_count(F.col("mask")).cast("long").alias("n_agree"))
-        .filter(F.col("n_agree") >= min_agree)
-        .select(
+        .selectExpr("doc_a", "doc_b", "CAST(bit_count(mask) AS BIGINT) AS n_agree")
+        .where(f"n_agree >= {min_agree}")
+        .selectExpr(
             "doc_a",
             "doc_b",
             "n_agree",
-            F.floor(F.col("n_agree").cast("double") / F.lit(float(n_hashes)) * 10000)
-            .cast("long")
-            .alias("est_jaccard4"),
+            f"CAST(floor(CAST(n_agree AS DOUBLE) / {float(n_hashes)}D * 10000) AS BIGINT)"
+            " AS est_jaccard4",
         )
     )
 

@@ -16,8 +16,11 @@ Publish protocol (exactly-once under foreachBatch's at-least-once):
 the batch's rows are written bucket-partitioned into an ``_aside*``
 dir and published with ONE directory rename (unique name per attempt),
 so a crash mid-publish leaves nothing visible and the replay recomputes
-the identical admitted set.  ``_aside*`` debris is swept at
-construction.
+the identical admitted set.  The write is the batch's only evaluation
+of its admission plan: the published row count is read from the
+written files' parquet footers (driver metadata, no Spark job), and an
+aside with no rows (a replayed batch) is removed instead of renamed.
+``_aside*`` debris is swept at construction.
 
 Compaction is a DISTRIBUTED Spark job — every over-threshold bucket's
 files are read as one DataFrame, ``repartition("bucket")`` gives one
@@ -37,6 +40,7 @@ import os
 import shutil
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -92,13 +96,13 @@ class BucketedDeltaStore:
     def slice_for(self, buckets: list[int], batch_id: int) -> DataFrame:
         """Index slice for an admission join: only the bucket dirs the
         batch's own signatures hash into, across all published deltas."""
-        paths = sorted(
-            p
+        files = [
+            f
             for b in buckets
-            for p in glob.glob(os.path.join(self.store_dir, "d_*", f"bucket={b}"))
-        )
-        n_files = sum(len(glob.glob(os.path.join(p, "*.parquet"))) for p in paths)
-        self.scan_stats.append((batch_id, len(paths), n_files))
+            for f in glob.glob(os.path.join(self.store_dir, "d_*", f"bucket={b}", "*.parquet"))
+        ]
+        paths = sorted({os.path.dirname(f) for f in files})
+        self.scan_stats.append((batch_id, len(paths), len(files)))
         if not paths:
             return self.spark.createDataFrame([], self.schema)
         return self.spark.read.schema(self.schema).parquet(*paths)
@@ -112,9 +116,12 @@ class BucketedDeltaStore:
         cols: list[str],
         batch_id: int,
         delta_name: str | None = None,
-    ) -> None:
+    ) -> int:
         """Atomically publish one batch's rows (must carry an int
-        ``bucket`` column) as a new delta dir.
+        ``bucket`` column) as a new delta dir; returns the number of
+        rows this call published, read from the written files' parquet
+        footers (driver metadata, no Spark job).  An empty write is
+        removed instead of published.
 
         Default naming is unique PER ATTEMPT (admission sinks: replay
         recomputes against the published state, so a second publish of
@@ -123,7 +130,7 @@ class BucketedDeltaStore:
         publish-if-absent (``delta_exists`` + this) for exactly-once
         without any admission self-match."""
         if delta_name is not None and self.delta_exists(delta_name):
-            return
+            return 0
         attempt = uuid.uuid4().hex[:8]
         aside = os.path.join(self.store_dir, f"_aside_b{batch_id}_{attempt}")
         # repartition by bucket first: ONE file per touched bucket per
@@ -132,6 +139,15 @@ class BucketedDeltaStore:
         rows.select(*cols, "bucket").repartition("bucket").write.partitionBy(
             "bucket"
         ).mode("overwrite").parquet(aside)
+        n = sum(
+            pq.read_metadata(f).num_rows
+            for f in glob.glob(os.path.join(aside, "bucket=*", "*.parquet"))
+        )
+        if n == 0:
+            # nothing to publish; a crash here leaves only the aside,
+            # which the next construction sweeps
+            shutil.rmtree(aside)
+            return 0
         # Spark leaves a _SUCCESS marker; recursiveFileLookup would try
         # to read it as parquet — drop it before publish
         for marker in glob.glob(os.path.join(aside, "_*")):
@@ -145,6 +161,7 @@ class BucketedDeltaStore:
             # deterministic-name race with a concurrent replay: the
             # delta is fully published (rename is atomic) — drop ours
             shutil.rmtree(aside, ignore_errors=True)
+        return n
 
     def maybe_compact(self, buckets: list[int]) -> None:
         """Distributed per-bucket compaction: once a bucket's rows are
@@ -208,13 +225,17 @@ class AdmissionSink:
     set and the index the next batch is checked against.
 
     A subclass declares ``schema`` (DDL of the stored row, without
-    ``bucket``) and ``id_col``, implements ``_key()`` (the probe key of
-    a stored row; its bucket is ``key % n_buckets``) and ``__call__``,
-    which computes the admitted rows and hands them to ``_admit``.  It
-    keeps its signatures, reject joins and serving methods."""
+    ``bucket``), ``id_col`` and ``rows_per_doc`` (the constant number of
+    stored rows per admitted document: a batch's admitted count is its
+    published row count divided by it), implements ``_key()`` (the
+    probe key of a stored row; its bucket is ``key % n_buckets``) and
+    ``__call__``, which computes the admitted rows and hands them to
+    ``_admit``.  It keeps its signatures, reject joins and serving
+    methods."""
 
     schema: str
     id_col = "doc_id"
+    rows_per_doc: int
 
     def __init__(
         self,
@@ -266,24 +287,12 @@ class AdmissionSink:
         b = bs[0] if len(bs) == 1 else F.explode(F.array(*bs))
         return sorted(r[0] for r in df.select(b.alias("b")).distinct().collect())
 
-    def _count(self, rows: DataFrame) -> int:
-        """Admitted ids among a batch's stored rows."""
-        return rows.select(self.id_col).distinct().count()
-
     def _admit(self, rows: DataFrame, batch_id: int, buckets: list[int]) -> None:
-        """Publish the admitted rows as one delta, record the batch,
-        then compact the buckets it touched (only those can have
-        grown)."""
-        rows = rows.select(
-            *self._cols, self._bucket_of(self._key()).alias("bucket")
-        ).persist()
-        try:
-            n = self._count(rows)
-            if n == 0:
-                self.admitted_batches.append((batch_id, 0))
-                return
-            self.store.publish(rows, self._cols, batch_id)
-            self.admitted_batches.append((batch_id, n))
+        """Publish the admitted rows as one delta (one evaluation of the
+        admission plan: the write), record the batch, then compact the
+        buckets it touched (only those can have grown)."""
+        rows = rows.select(*self._cols, self._bucket_of(self._key()).alias("bucket"))
+        n = self.store.publish(rows, self._cols, batch_id) // self.rows_per_doc
+        self.admitted_batches.append((batch_id, n))
+        if n:
             self.store.maybe_compact(buckets)
-        finally:
-            rows.unpersist()

@@ -34,12 +34,10 @@ class DedupIngestSink(AdmissionSink):
     training-data extensions add on top of the CDC engine)."""
 
     schema = "doc_id long, fp_md5 string, fp48 long"
+    rows_per_doc = 1
 
     def _key(self) -> Column:
         return F.col("fp48")
-
-    def _count(self, rows: DataFrame) -> int:
-        return rows.count()  # one stored row per admitted document
 
     def accepted(self) -> DataFrame:
         """The full deduplicated corpus (doc_id, fp_md5, fp48).

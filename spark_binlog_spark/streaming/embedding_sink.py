@@ -107,6 +107,10 @@ class EmbeddingNearDupIngestSink(AdmissionSink):
             with open(self._planes_meta) as fh:
                 self._planes_resolved = int(json.load(fh)["planes"])
 
+    @property
+    def rows_per_doc(self) -> int:
+        return self.n_tables  # one (tbl, sbucket) row per hash table
+
     def _key(self) -> Column:
         return 31 * F.col("sbucket") + F.col("tbl")
 

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from spark_binlog_spark.functions.dedup import (
     N_MINHASH,
+    combo_structs,
     minhash_pairs_from_wide,
     minhash_signatures_wide,
 )
@@ -75,6 +76,10 @@ class NearDupIngestSink(AdmissionSink):
         self.min_agree = min_agree
         self.n_hashes = n_hashes
 
+    @property
+    def rows_per_doc(self) -> int:
+        return self.n_hashes  # one (seed, minhash) row per hash
+
     def _key(self) -> Column:
         return F.col("minhash")
 
@@ -99,55 +104,44 @@ class NearDupIngestSink(AdmissionSink):
         cols = [f"mh{i}" for i in range(n)]
         wide = minhash_signatures_wide(batch_df, n_hashes=n).persist()
         try:
+            # SQL text throughout: see DEVNOTES "Spark pitfalls"
             stack = ", ".join(f"{i}, mh{i}" for i in range(n))
-            sig = wide.select(
-                "doc_id", F.expr(f"stack({n}, {stack}) AS (seed, minhash)")
-            ).select("doc_id", F.col("seed").cast("int").alias("seed"), "minhash")
+            sig = wide.selectExpr(
+                "doc_id", f"stack({n}, {stack}) AS (seed, minhash)"
+            ).selectExpr("doc_id", "CAST(seed AS INT) AS seed", "minhash")
             buckets = self._buckets(sig)
             index_slice = self.store.slice_for(buckets, batch_id)
             iwide = index_slice.groupBy("doc_id").agg(
                 *[
-                    F.max(F.when(F.col("seed") == i, F.col("minhash"))).alias(f"i{c}")
+                    F.expr(f"max(CASE WHEN seed = {i} THEN minhash END) AS i{c}")
                     for i, c in enumerate(cols)
                 ]
             )
-            combos = [(i, j) for i in range(n) for j in range(i + 1, n)]
 
             def combo_rows(df, idc, pfx):
                 pcols = [f"{pfx}{c}" for c in cols]
-                return df.select(
-                    F.col("doc_id").alias(idc),
-                    *pcols,
-                    F.explode(
-                        F.array(
-                            *[
-                                F.struct(
-                                    F.lit(k).alias("cid"),
-                                    F.col(pcols[i]).alias("u"),
-                                    F.col(pcols[j]).alias("v"),
-                                )
-                                for k, (i, j) in enumerate(combos)
-                            ]
-                        )
-                    ).alias("cb"),
-                ).select(idc, *pcols, "cb.cid", "cb.u", "cb.v").filter(
-                    F.col("u").isNotNull() & F.col("v").isNotNull()
+                return (
+                    df.selectExpr(
+                        f"doc_id AS {idc}",
+                        *pcols,
+                        f"explode(array({combo_structs(pcols)})) AS cb",
+                    )
+                    .selectExpr(idc, *pcols, "cb.cid", "cb.u", "cb.v")
+                    .where("u IS NOT NULL AND v IS NOT NULL")
                 )
 
             bc = combo_rows(wide, "b_doc", "")
             ic = combo_rows(iwide, "i_doc", "i")
-            n_agree = sum(
-                F.coalesce((F.col(c) == F.col(f"i{c}")).cast("int"), F.lit(0)) for c in cols
-            )
+            n_agree = " + ".join(f"coalesce(CAST({c} = i{c} AS INT), 0)" for c in cols)
             idx_reject = (
                 ic.join(bc, ["cid", "u", "v"])
-                .filter(n_agree >= self.min_agree)
-                .select(F.col("b_doc").alias("doc_id"))
+                .where(f"{n_agree} >= {self.min_agree}")
+                .selectExpr("b_doc AS doc_id")
                 .distinct()
             )
             inb_reject = (
                 minhash_pairs_from_wide(wide, n_hashes=n, min_agree=self.min_agree)
-                .select(F.col("doc_b").alias("doc_id"))
+                .selectExpr("doc_b AS doc_id")
                 .distinct()
             )
             admitted = sig.join(idx_reject, "doc_id", "left_anti").join(

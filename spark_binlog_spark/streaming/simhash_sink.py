@@ -65,6 +65,10 @@ class SimHashIngestSink(AdmissionSink):
         self.bits = bits
         self.bands = bands
 
+    @property
+    def rows_per_doc(self) -> int:
+        return self.bands  # one row per band
+
     def _key(self, band_idx: Column | None = None, band_val: Column | None = None) -> Column:
         """Probe key of a (band_idx, band_val) pair; a stored row's own
         columns by default."""
@@ -128,12 +132,10 @@ class SimHashIngestSink(AdmissionSink):
         flat = simhash(batch_df, bits=self.bits).persist()  # (doc_id, simhash16)
         try:
             dsig = flat.select("simhash16").distinct()
-            probes = dsig.select(
-                "simhash16",
-                F.explode(F.array(*[F.lit(m).cast("long") for m in masks])).alias("mk"),
-            ).select(
-                "simhash16",
-                F.col("simhash16").bitwiseXOR(F.col("mk")).alias("probe"),
+            # one SQL array of the masks: see DEVNOTES "Spark pitfalls"
+            mks = ", ".join(f"CAST({m} AS BIGINT)" for m in masks)
+            probes = dsig.selectExpr("simhash16", f"explode(array({mks})) AS mk").selectExpr(
+                "simhash16", "simhash16 ^ mk AS probe"
             )
             # buckets any probe's bands map to (the index rows a matching
             # sig would live in)

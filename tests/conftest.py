@@ -88,3 +88,21 @@ class _CrashAt:
             return real(*args, **kwargs)
 
         return call
+
+
+class _RoundTrips:
+    """Counts py4j round trips from the Python driver to the JVM (calls
+    of ``ClientServerConnection.send_command``) from construction on;
+    ``n`` holds the count."""
+
+    def __init__(self, monkeypatch):
+        from py4j.clientserver import ClientServerConnection
+
+        self.n = 0
+        real = ClientServerConnection.send_command
+
+        def send_command(conn, *args, **kwargs):
+            self.n += 1
+            return real(conn, *args, **kwargs)
+
+        monkeypatch.setattr(ClientServerConnection, "send_command", send_command)

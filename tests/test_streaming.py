@@ -1673,6 +1673,70 @@ class TestDedupIngestSink:
         assert sink.n_compactions == 1
         assert step > 6, "expected publish, compaction and prune steps"
 
+    def test_crash_removing_an_empty_aside_converges(self, spark, tmp_path, monkeypatch):
+        """A replayed batch admits nothing: its write is empty and the
+        store removes that aside instead of publishing it.  Crash the
+        replay at each file or directory delete of that removal, open
+        a fresh sink on the same directory and replay the batch again;
+        the accepted set must equal the no-crash run's, with the
+        replay recorded as ``(batch_id, 0)`` and no aside left."""
+        import glob
+        import shutil
+
+        from spark_binlog_spark.streaming.dedup_sink import DedupIngestSink
+        from tests.conftest import _CrashAt
+
+        def batch(rows):
+            return spark.createDataFrame(rows, "doc_id long, text string")
+
+        b0 = batch([(1, "eta"), (2, "theta")])
+        b1 = batch([(3, "iota"), (4, "eta"), (5, "kappa")])
+
+        def make(path):
+            return DedupIngestSink(spark, path, n_buckets=2, compact_threshold=2)
+
+        def accepted(sink):
+            return sorted(map(tuple, sink.accepted().collect()))
+
+        ref = make(str(tmp_path / "ref"))
+        ref(b0, 0)
+        ref(b1, 1)
+        ref(b1, 1)
+        want = accepted(ref)
+        assert ref.admitted_batches == [(0, 2), (1, 2), (1, 0)]
+        seed = str(tmp_path / "seed")
+        s = make(seed)
+        s(b0, 0)
+        s(b1, 1)
+        crash = _CrashAt(monkeypatch, [(os, "unlink"), (os, "rmdir")])
+        step = 0
+        while True:
+            step += 1
+            assert step <= 16, "removing an empty aside should take a handful of steps"
+            path = str(tmp_path / f"step{step}")
+            shutil.copytree(seed, path)
+            deltas = sorted(glob.glob(os.path.join(path, "d_*")))
+            sink = make(path)
+            crash.reset(step)
+            crash.armed = True
+            try:
+                sink(b1, 1)
+            except OSError:
+                pass
+            finally:
+                crash.armed = False
+            if not crash.fired:
+                break
+            assert sorted(glob.glob(os.path.join(path, "d_*"))) == deltas, f"step {step}"
+            resumed = make(path)  # restart: sweep, then replay batch 1
+            resumed(b1, 1)
+            assert resumed.admitted_batches == [(1, 0)], f"step {step}"
+            assert accepted(resumed) == want, f"crash at removal step {step}"
+            assert not glob.glob(os.path.join(path, "_aside*")), f"step {step}"
+        assert step > 1, "the replay never reached the empty-aside removal"
+        assert sink.admitted_batches == [(1, 0)]
+        assert not glob.glob(os.path.join(path, "_aside*"))
+
 
 class TestNearDupIngestSink:
     DOCS = [
@@ -1791,6 +1855,31 @@ class TestNearDupIngestSink:
         )
         bid, n_buckets_scanned, n_files = sink.scan_stats[-1]
         assert bid == 1 and n_buckets_scanned <= 8 and n_files < total
+
+
+    def test_warm_batch_round_trip_budget(self, spark, tmp_path, monkeypatch):
+        """The admission plan is built as SQL text, so a warm batch
+        costs ~1,000 py4j round trips.  Built from one Column call per
+        band expression it cost ~13,000: PySpark captures the call site
+        on every ``functions`` call and Column operator."""
+        from spark_binlog_spark.streaming.neardup_sink import NearDupIngestSink
+        from tests.conftest import _RoundTrips
+
+        sink = NearDupIngestSink(spark, str(tmp_path / "store"), min_agree=2)
+        batches = [
+            spark.createDataFrame(
+                [(b * 100 + i, f"batch {b} document {i} about topic {i % 3} words {i * 7}")
+                 for i in range(20)],
+                "doc_id long, text string",
+            )
+            for b in range(3)
+        ]
+        sink(batches[0], 0)
+        sink(batches[1], 1)
+        rt = _RoundTrips(monkeypatch)
+        sink(batches[2], 2)
+        assert sink.admitted_batches[2][1] > 0
+        assert rt.n <= 2500, f"{rt.n} py4j round trips for one warm batch"
 
 
 class TestNearDupCompactionHygiene:
@@ -2377,6 +2466,49 @@ class TestEmbeddingNearDupIngestSink:
                 EmbeddingNearDupIngestSink(
                     spark, str(tmp_path / "s"), min_cosine4=bad
                 )
+
+
+class TestAdmissionPublish:
+    """The publish step the four admission sinks share: the admitted
+    rows are evaluated once, by the write (no cached copy, no count
+    job), and a replay, whose write is empty, publishes nothing."""
+
+    def _sink_and_batch(self, spark, kind, store):
+        from spark_binlog_spark.streaming.dedup_sink import DedupIngestSink
+        from spark_binlog_spark.streaming.embedding_sink import EmbeddingNearDupIngestSink
+        from spark_binlog_spark.streaming.neardup_sink import NearDupIngestSink
+        from spark_binlog_spark.streaming.simhash_sink import SimHashIngestSink
+
+        if kind == "embedding":
+            return (
+                EmbeddingNearDupIngestSink(spark, store, min_cosine4=8000, planes=4, n_tables=2),
+                TestEmbeddingNearDupIngestSink()._batch(spark, [1, 2, 3]),
+            )
+        sink = {
+            "dedup": lambda: DedupIngestSink(spark, store),
+            "neardup": lambda: NearDupIngestSink(spark, store, min_agree=2),
+            "simhash": lambda: SimHashIngestSink(spark, store, max_hamming=2),
+        }[kind]()
+        return sink, spark.createDataFrame(
+            TestNearDupIngestSink.DOCS[:3], "doc_id long, text string"
+        )
+
+    @pytest.mark.parametrize("kind", ["dedup", "neardup", "simhash", "embedding"])
+    def test_publish_caches_nothing_and_replay_publishes_nothing(self, spark, tmp_path, kind):
+        import glob
+
+        store = str(tmp_path / "store")
+        sink, batch = self._sink_and_batch(spark, kind, store)
+        persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
+        sink(batch, 0)
+        assert sink.admitted_batches[0][1] > 0
+        assert len(spark.sparkContext._jsc.getPersistentRDDs()) <= persisted
+        deltas = sorted(glob.glob(os.path.join(store, "d_*")))
+        assert len(deltas) == 1
+        sink(batch, 0)  # at-least-once replay
+        assert sink.admitted_batches[1] == (0, 0)
+        assert sorted(glob.glob(os.path.join(store, "d_*"))) == deltas
+        assert not glob.glob(os.path.join(store, "_aside*"))
 
 
 class TestDistributedCompaction:
