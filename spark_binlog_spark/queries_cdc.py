@@ -2087,13 +2087,13 @@ def _source_partitions(spark: SparkSession, events_path: str) -> int:
     events each (~15 s) with 24 cores idle.  Follow the session's
     ``defaultParallelism`` instead (the same rule bench.py's stream
     entries already use), bounded by the event count so tiny logs don't
-    schedule near-empty Python workers.  The probe is parquet footer
-    metadata only — no data read."""
-    from spark_binlog_spark.sources.binlog_fixture import _probe_end
+    schedule near-empty Python workers (the source's own per-batch
+    rule, ``_task_budget``, which region mode does not apply).  The
+    probe is parquet footer metadata only — no data read."""
+    from spark_binlog_spark.sources.binlog_fixture import _probe_end, _task_budget
 
-    n_events = _probe_end(events_path)
     dp = int(spark.sparkContext.defaultParallelism)
-    return max(1, min(max(4, dp), (n_events + 4095) // 4096))
+    return _task_budget(_probe_end(events_path), max(4, dp))
 
 
 def _drain_aggregated(spark: SparkSession, df: DataFrame, agg_fn, schema: str) -> DataFrame:

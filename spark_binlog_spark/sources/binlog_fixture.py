@@ -12,10 +12,13 @@ for the binlog) is itself replayable from any offset — the property the
 reference had to build B1+O6 to fake.
 
 Scale/fan-out: ``partitions(start, end)`` splits every micro-batch into
-``numPartitions`` contiguous offset ranges, so a 1000-executor cluster
-reads one batch with 1000 parallel tasks — the reference's
-single-reader bottleneck ("todo: optimize",
-MLSQLBinLogDataSource.scala:394-397) is structurally gone.
+contiguous offset ranges, one read task per ``EVENTS_PER_TASK`` (4,096)
+events and at most ``numPartitions`` — a per-batch maximum, so a
+1000-executor cluster reads a large backlog with 1000 parallel tasks
+and the reference's single-reader bottleneck ("todo: optimize",
+MLSQLBinLogDataSource.scala:394-397) is structurally gone, while a
+small live-tail trigger runs one task instead of paying every Python
+task's fixed start cost (~0.2 CPU-s on a 4-core host) per core.
 
 Backpressure: ``maxEventsPerTrigger`` caps each micro-batch exactly like
 the reference's queue-size admission control (B2,
@@ -41,6 +44,10 @@ from pyspark.sql.types import DoubleType, LongType, StringType, StructField, Str
 from spark_binlog_spark import POW13
 
 WIRE_SCHEMA = StructType([StructField("value", StringType())])
+
+# Events per Python read task: a batch plans ceil(events / this) tasks,
+# capped at ``numPartitions`` (``_task_budget``).
+EVENTS_PER_TASK = 4096
 
 OP_MAP = {"signup": "insert", "error": "delete"}  # else 'update' (cdc.py contract)
 
@@ -452,14 +459,46 @@ def _global_to_packed(index: list[dict], eid: int) -> int:
     raise ValueError(f"event {eid} outside segment index")
 
 
+def _task_budget(events: int, max_tasks: int) -> int:
+    """Read tasks for a batch of ``events``: one per ``EVENTS_PER_TASK``,
+    at most ``max_tasks`` (``numPartitions``), at least one."""
+    return max(1, min(max_tasks, -(-events // EVENTS_PER_TASK)))
+
+
+def _split_spans(spans: list[tuple], budget: int) -> list[tuple]:
+    """Subdivide ``(tag, lo, hi)`` spans into ``(tag, lo, hi)`` task
+    ranges: ``budget`` tasks allotted proportionally to span length,
+    at least one per span, so no range ever crosses a span."""
+    total = sum(hi - lo for _, lo, hi in spans)
+    out = []
+    for tag, lo, hi in spans:
+        n = max(1, round(budget * (hi - lo) / total))
+        step = (hi - lo + n - 1) // n
+        out.extend((tag, x, min(x + step, hi)) for x in range(lo, hi, step))
+    return out
+
+
+def _offset_partitions(path: str, s: int, e: int, max_tasks: int) -> list["OffsetRangePartition"]:
+    """Flat-store [s, e) as ``_task_budget`` contiguous ranges."""
+    if e <= s:
+        return [OffsetRangePartition(s, s, path)]
+    return [
+        OffsetRangePartition(lo, hi, path)
+        for _, lo, hi in _split_spans([(path, s, e)], _task_budget(e - s, max_tasks))
+    ]
+
+
 def _segment_partitions(
     index: list[dict], start_packed: int, end_packed: int, num_partitions: int
 ) -> list["OffsetRangePartition"]:
     """Split packed [start, end) into per-segment, per-task event-id
     ranges.  A partition NEVER spans a file boundary (each task reads
-    one binlog file — the rotation analogue); within the batch, splits
-    are allocated to segments proportionally to their event counts so a
-    1000-task cluster still balances when one file holds the tail."""
+    one binlog file — the rotation analogue).  ``num_partitions`` is a
+    per-batch maximum: the batch gets one task per ``EVENTS_PER_TASK``
+    events, allocated to segments proportionally to their event counts
+    (at least one per segment touched), so a live-tail trigger reads
+    each of its files in one task and a 1000-task cluster still
+    balances a backlog when one file holds the tail."""
     s = _packed_to_global(index, start_packed)
     e = _packed_to_global(index, end_packed)
     spans = []  # (path, lo, hi) global-eid half-open per segment
@@ -469,16 +508,8 @@ def _segment_partitions(
             spans.append((seg["path"], lo, hi))
     if not spans:
         return [OffsetRangePartition(s, s, index[0]["path"])]
-    total = sum(hi - lo for _, lo, hi in spans)
-    out = []
-    for path, lo, hi in spans:
-        n = max(1, round(num_partitions * (hi - lo) / total))
-        step = (hi - lo + n - 1) // n
-        out.extend(
-            OffsetRangePartition(x, min(x + step, hi), path)
-            for x in range(lo, hi, step)
-        )
-    return out
+    budget = _task_budget(sum(hi - lo for _, lo, hi in spans), num_partitions)
+    return [OffsetRangePartition(lo, hi, path) for path, lo, hi in _split_spans(spans, budget)]
 
 
 def write_segments(
@@ -982,7 +1013,7 @@ class BinlogFixtureStreamReader(DataSourceStreamReader):
             # one partition per region (":248 parallelize per region")
             out = []
             rolled = self._region_index() if self.region_rolled else None
-            spans: list[tuple[int, str, int, int]] = []  # (region, path, lo, hi)
+            spans: list[tuple[tuple[int, str], int, int]] = []  # ((region, path), lo, hi)
             for r in range(self.regions):
                 key = f"r{r}"
                 s = start.get(key, self.start_offset)
@@ -996,7 +1027,7 @@ class BinlogFixtureStreamReader(DataSourceStreamReader):
                     # no other region's data is even reachable from the
                     # task's path).  Subdivision below.
                     r_spans = [
-                        (r, seg["path"], max(s, seg["min"]), min(e, seg["max"] + 1))
+                        ((r, seg["path"]), max(s, seg["min"]), min(e, seg["max"] + 1))
                         for seg in rolled[r]
                         if max(s, seg["min"]) < min(e, seg["max"] + 1)
                     ]
@@ -1022,28 +1053,15 @@ class BinlogFixtureStreamReader(DataSourceStreamReader):
                 # defaultParallelism fans a big batch out to the
                 # cluster.  Splits stay within one file; the range
                 # predicate prunes row groups, so subtasks don't re-read
-                # each other's data.
-                total = sum(hi - lo for _, _, lo, hi in spans)
-                for r, path, lo, hi in spans:
-                    n = max(1, round(self.num_partitions * (hi - lo) / total))
-                    step = (hi - lo + n - 1) // n
-                    out.extend(
-                        OffsetRangePartition(
-                            x, min(x + step, hi), path, region=r, n_regions=self.regions
-                        )
-                        for x in range(lo, hi, step)
-                    )
+                # each other's data.  Unlike the single-offset modes the
+                # budget is not scaled down by event count.
+                out.extend(
+                    OffsetRangePartition(lo, hi, path, region=r, n_regions=self.regions)
+                    for (r, path), lo, hi in _split_spans(spans, self.num_partitions)
+                )
             return out
         s, e = start["offset"], end["offset"]
-        s = self._observe_batch(s, e)
-        if e <= s:
-            return [OffsetRangePartition(s, s, self.path)]
-        n = min(self.num_partitions, e - s)
-        step = (e - s + n - 1) // n
-        return [
-            OffsetRangePartition(lo, min(lo + step, e), self.path)
-            for lo in range(s, e, step)
-        ]
+        return _offset_partitions(self.path, self._observe_batch(s, e), e, self.num_partitions)
 
     def read(self, partition: OffsetRangePartition):
         if partition.end <= partition.start:
@@ -1101,12 +1119,7 @@ class BinlogFixtureBatchReader(DataSourceReader):
 
     def partitions(self):
         e = min(self.end, _probe_end(self.path))
-        s = self.start
-        if e <= s:
-            return [OffsetRangePartition(s, s, self.path)]
-        n = min(self.num_partitions, e - s)
-        step = (e - s + n - 1) // n
-        return [OffsetRangePartition(lo, min(lo + step, e), self.path) for lo in range(s, e, step)]
+        return _offset_partitions(self.path, self.start, e, self.num_partitions)
 
     def read(self, partition: OffsetRangePartition):
         if partition.end <= partition.start:

@@ -128,9 +128,10 @@ class BucketedDeltaStore:
         the same batch must never collide).  ``delta_name`` pins a
         DETERMINISTIC name instead — append-only sinks use
         publish-if-absent (``delta_exists`` + this) for exactly-once
-        without any admission self-match."""
+        without any admission self-match; if that delta already landed,
+        nothing is written and its footer row count is returned."""
         if delta_name is not None and self.delta_exists(delta_name):
-            return 0
+            return self._footer_rows(os.path.join(self.store_dir, delta_name))
         attempt = uuid.uuid4().hex[:8]
         aside = os.path.join(self.store_dir, f"_aside_b{batch_id}_{attempt}")
         # repartition by bucket first: ONE file per touched bucket per
@@ -139,10 +140,7 @@ class BucketedDeltaStore:
         rows.select(*cols, "bucket").repartition("bucket").write.partitionBy(
             "bucket"
         ).mode("overwrite").parquet(aside)
-        n = sum(
-            pq.read_metadata(f).num_rows
-            for f in glob.glob(os.path.join(aside, "bucket=*", "*.parquet"))
-        )
+        n = self._footer_rows(aside)
         if n == 0:
             # nothing to publish; a crash here leaves only the aside,
             # which the next construction sweeps
@@ -162,6 +160,14 @@ class BucketedDeltaStore:
             # delta is fully published (rename is atomic) — drop ours
             shutil.rmtree(aside, ignore_errors=True)
         return n
+
+    @staticmethod
+    def _footer_rows(delta_dir: str) -> int:
+        """Rows under one delta dir, from its parquet footers."""
+        return sum(
+            pq.read_metadata(f).num_rows
+            for f in glob.glob(os.path.join(delta_dir, "bucket=*", "*.parquet"))
+        )
 
     def maybe_compact(self, buckets: list[int]) -> None:
         """Distributed per-bucket compaction: once a bucket's rows are

@@ -132,13 +132,13 @@ class InvertedIndexSink:
             .persist()
         )
         try:
-            n = post.count()
             buckets = sorted(
                 r[0] for r in post.select("bucket").distinct().collect()
             )
             # postings first (publish-if-absent: a crash-replay whose
-            # delta already landed skips straight to the marker) ...
-            self.store.publish(post, POSTING_COLS, batch_id, delta_name=f"d_b{batch_id}")
+            # delta already landed skips straight to the marker, and
+            # gets that delta's row count back) ...
+            n = self.store.publish(post, POSTING_COLS, batch_id, delta_name=f"d_b{batch_id}")
             # ... then the totals marker = the durable applied record
             tot = dl.agg(
                 F.count("*").cast("long").alias("n_docs"),

@@ -147,6 +147,25 @@ class Scd2HistorySink:
                     self._bucket(F.col(k)).alias("b")
                 ).distinct().collect()  # ≤ n_buckets scalars: a plan step
             )
+            # compact BEFORE publish — the opposite order from the
+            # admission sinks, and load-bearing: this sink's replay
+            # guard is the deterministic d_b<id> delta name, and a
+            # post-publish compaction could drain and prune THAT delta
+            # before the checkpoint commits the batch.  A crash in that
+            # window would make the redelivery's delta_exists check
+            # miss and re-apply the batch against a store that already
+            # contains it (closures would then close the batch's own
+            # versions BACKWARD).  Compacting first only ever merges
+            # deltas of already-committed batches, so d_b<id> survives
+            # until batch_id itself is committed and can never be
+            # redelivered again.  (The inverted-index sink solves the
+            # same hazard with marker files instead.)  It also runs
+            # before the slice is listed, because ``out`` is evaluated
+            # only by the publish write and must not read files the
+            # compaction deletes.  A batch whose ``out`` is empty (only
+            # deletes of keys with no open version) still compacts its
+            # buckets: harmless, for the same reason.
+            self.store.maybe_compact(buckets)
             slice_ = self.store.slice_for(buckets, batch_id)
             open_v = (
                 slice_.filter((F.col("kind") == "v") & F.col("valid_to").isNull())
@@ -166,35 +185,14 @@ class Scd2HistorySink:
                 F.col("__first").alias("valid_to"),
                 F.lit("c").alias("kind"),
             )
-            out = (
-                versions.unionByName(closures)
-                .withColumn("bucket", self._bucket(F.col(k)))
-                .persist()
+            out = versions.unionByName(closures).withColumn(
+                "bucket", self._bucket(F.col(k))
             )
-            try:
-                n = out.count()
-                if n == 0:
-                    self.applied_batches.append((batch_id, 0))
-                    return
-                # compact BEFORE publish — the opposite order from the
-                # admission sinks, and load-bearing: this sink's replay
-                # guard is the deterministic d_b<id> delta name, and a
-                # post-publish compaction could drain and prune THAT
-                # delta before the checkpoint commits the batch.  A
-                # crash in that window would make the redelivery's
-                # delta_exists check miss and re-apply the batch
-                # against a store that already contains it (closures
-                # would then close the batch's own versions BACKWARD).
-                # Compacting first only ever merges deltas of
-                # already-committed batches, so d_b<id> survives until
-                # batch_id itself is committed and can never be
-                # redelivered again.  (The inverted-index sink solves
-                # the same hazard with marker files instead.)
-                self.store.maybe_compact(buckets)
-                self.store.publish(out, self.cols, batch_id, delta_name=delta)
-                self.applied_batches.append((batch_id, n))
-            finally:
-                out.unpersist()
+            # the write is out's only evaluation; publish counts its
+            # rows from the footers and removes an empty write, so an
+            # empty batch publishes no d_b<id>
+            n = self.store.publish(out, self.cols, batch_id, delta_name=delta)
+            self.applied_batches.append((batch_id, n))
         finally:
             evs.unpersist()
 

@@ -2152,6 +2152,23 @@ class TestInvertedIndexSink:
         assert dup.count() == 0
         self._served_vs_batch(spark, sink2, self._batch(spark, self.DOCS0))
 
+    def test_torn_replay_records_the_published_postings(self, spark, tmp_path):
+        """The applied count comes from the publish, with no count job:
+        a replay whose postings delta landed but whose marker did not
+        records that delta's row count, as the first attempt did."""
+        import os
+
+        from spark_binlog_spark.streaming.inverted_index import InvertedIndexSink
+
+        store = str(tmp_path / "store")
+        sink = InvertedIndexSink(spark, store, n_buckets=4)
+        sink(self._batch(spark, self.DOCS0), 0)
+        assert sink.applied_batches == [(0, 5)]  # distinct (term, doc) pairs
+        os.remove(os.path.join(store, "totals", "t_b0.parquet"))
+        sink2 = InvertedIndexSink(spark, store, n_buckets=4)
+        sink2(self._batch(spark, self.DOCS0), 0)
+        assert sink2.applied_batches == [(0, 5)]
+
     def test_query_reads_only_matching_term_buckets(self, spark, tmp_path):
         """BM25 serving must open only the query terms' bucket dirs —
         the pruning receipt, same contract as the admission sinks."""
@@ -2662,6 +2679,93 @@ class TestRegionPartitionedStore:
         envs = [_json.loads(r["value"]) for r in spark.table("region_part_stream").collect()]
         assert sorted(e["rows"][0]["cdc_offset"] for e in envs) == list(range(30))
         assert all(e["schema"] is None for e in envs)  # region mode = schema-less
+
+
+class TestPerBatchTaskSizing:
+    """``numPartitions`` is a per-batch maximum: a batch plans one read
+    task per ``EVENTS_PER_TASK`` events (at least one per segment file
+    it touches), so a live-tail trigger pays one Python task's start
+    cost, not one per core, while a backlog still fans out fully."""
+
+    N = 40_000  # two 20,000-event segment files
+
+    def _stores(self, tmp_path):
+        from spark_binlog_spark.sources.binlog_fixture import write_segments
+
+        flat = str(tmp_path / "ev.parquet")
+        _write_events(flat, [(i, T0 + i, i % 5, "click", float(i), "{}") for i in range(self.N)])
+        seg_dir = str(tmp_path / "binlog")
+        assert write_segments(flat, seg_dir, n_segments=2) == self.N // 2
+        return flat, seg_dir
+
+    @staticmethod
+    def _segmented(seg_dir, lo, hi, num_partitions=4):
+        from spark_binlog_spark.sources.binlog_fixture import (
+            BinlogFixtureStreamReader,
+            _global_to_packed,
+        )
+
+        rdr = BinlogFixtureStreamReader({"path": seg_dir, "numPartitions": str(num_partitions)})
+        idx = rdr._seg_index()
+        parts = rdr.partitions(
+            {"offset": _global_to_packed(idx, lo)}, {"offset": _global_to_packed(idx, hi)}
+        )
+        spans = {s["path"]: (s["min"], s["max"] + 1) for s in idx}
+        for p in parts:  # no task crosses a file
+            f_lo, f_hi = spans[p.path]
+            assert f_lo <= p.start < p.end <= f_hi, (p, spans[p.path])
+        return parts
+
+    @staticmethod
+    def _flat(flat, lo, hi, num_partitions=4):
+        from spark_binlog_spark.sources.binlog_fixture import (
+            BinlogFixtureBatchReader,
+            BinlogFixtureStreamReader,
+        )
+
+        n = str(num_partitions)
+        stream = BinlogFixtureStreamReader({"path": flat, "numPartitions": n}).partitions(
+            {"offset": lo}, {"offset": hi}
+        )
+        batch = BinlogFixtureBatchReader(
+            {"path": flat, "numPartitions": n, "startingOffset": lo, "endingOffset": hi}
+        ).partitions()
+        assert [(p.start, p.end) for p in stream] == [(p.start, p.end) for p in batch]
+        return stream
+
+    @staticmethod
+    def _covers_once(parts, lo, hi):
+        ids = sorted(i for p in parts for i in range(p.start, p.end))
+        assert ids == list(range(lo, hi))
+
+    def test_live_tail_batch_plans_one_task_per_file(self, tmp_path):
+        flat, seg_dir = self._stores(tmp_path)
+        for lo, hi, n_files in ((100, 1650, 1), (19_000, 20_550, 2)):
+            parts = self._segmented(seg_dir, lo, hi)
+            assert len(parts) == n_files and len({p.path for p in parts}) == n_files
+            self._covers_once(parts, lo, hi)
+            parts = self._flat(flat, lo, hi)
+            assert len(parts) == 1
+            self._covers_once(parts, lo, hi)
+
+    def test_backlog_fans_out_to_num_partitions(self, tmp_path):
+        from collections import Counter
+
+        from spark_binlog_spark.sources.binlog_fixture import EVENTS_PER_TASK
+
+        flat, seg_dir = self._stores(tmp_path)
+        lo, hi = 500, 500 + 4 * EVENTS_PER_TASK + 7  # inside the first file
+        for parts in (self._segmented(seg_dir, lo, hi), self._flat(flat, lo, hi)):
+            assert len(parts) == 4
+            self._covers_once(parts, lo, hi)
+        # the whole log: 10 tasks' worth of events, capped at 4 (two per
+        # file) and, with a larger maximum, one task per 4,096 events
+        parts = self._segmented(seg_dir, 0, self.N)
+        assert sorted(Counter(p.path for p in parts).values()) == [2, 2]
+        self._covers_once(parts, 0, self.N)
+        for parts in (self._segmented(seg_dir, 0, self.N, 32), self._flat(flat, 0, self.N, 32)):
+            assert len(parts) == -(-self.N // EVENTS_PER_TASK)
+            self._covers_once(parts, 0, self.N)
 
 
 class TestRolledWALRegions:
