@@ -6,7 +6,7 @@ Layout: signature rows live under ``d_<delta>/bucket=K`` where K is the
 sink's probe-key hash mod ``n_buckets`` — the probe key IS the bucket
 key, so per-batch admission reads ONLY the bucket dirs the batch's own
 signatures hash into (read I/O O(index ∩ batch buckets), write I/O
-O(admitted batch); nothing is ever rewritten).  This is the bounded-
+O(admitted batch) plus the buckets it compacts).  This is the bounded-
 recovery idea of the reference's per-key WAL map: recovery touches one
 key's queue, never the whole WAL (OriginalSourceServerInExecutor.scala:
 31-43).  The driver collects at most ``n_buckets`` scalars per batch to
@@ -22,15 +22,19 @@ written files' parquet footers (driver metadata, no Spark job), and an
 aside with no rows (a replayed batch) is removed instead of renamed.
 ``_aside*`` debris is swept at construction.
 
-Compaction is a DISTRIBUTED Spark job — every over-threshold bucket's
-files are read as one DataFrame, ``repartition("bucket")`` gives one
-task and one output file per bucket, and the result is published with
-the same aside-rename protocol before the olds are deleted.  The
-driver only lists names and renames: no data row moves through it,
-matching the reference keeping flush-time maintenance on the server
-side (OriginalSourceServerInExecutor.scala:132-147).  A crash leaves
-duplicate rows at worst, which the sinks' admission joins and
-``accepted()`` distincts absorb.
+Compaction rides the publish write: each probed bucket whose files,
+counting the one this write adds, reach ``compact_threshold`` is read
+into the same ``repartition("bucket")`` write (one aside, one rename),
+and after the rename its merged files are deleted and drained dirs
+pruned.  The count is the aside's footer rows minus the merged files'
+(exact over a torn compaction's duplicates); an empty batch (a replay)
+compacts nothing.  A crash before the deletes leaves the merged rows
+visible twice, which the admission joins and ``accepted()`` distincts
+absorb.  The driver only lists and renames, matching the reference
+keeping flush-time maintenance on the server side
+(OriginalSourceServerInExecutor.scala:132-147).  The SCD2 and
+inverted-index sinks' replay guard is their ``d_b<id>`` name, which
+must not absorb old rows: they compact alone (``maybe_compact``).
 """
 
 from __future__ import annotations
@@ -116,12 +120,14 @@ class BucketedDeltaStore:
         cols: list[str],
         batch_id: int,
         delta_name: str | None = None,
+        buckets: list[int] = (),
     ) -> int:
         """Atomically publish one batch's rows (must carry an int
         ``bucket`` column) as a new delta dir; returns the number of
         rows this call published, read from the written files' parquet
         footers (driver metadata, no Spark job).  An empty write is
-        removed instead of published.
+        removed instead of published.  Of ``buckets``, those due for
+        compaction are merged into the same write (module docstring).
 
         Default naming is unique PER ATTEMPT (admission sinks: replay
         recomputes against the published state, so a second publish of
@@ -131,28 +137,20 @@ class BucketedDeltaStore:
         without any admission self-match; if that delta already landed,
         nothing is written and its footer row count is returned."""
         if delta_name is not None and self.delta_exists(delta_name):
-            return self._footer_rows(os.path.join(self.store_dir, delta_name))
+            return self._footer_rows(os.path.join(self.store_dir, delta_name, "bucket=*"))
+        merge = self._due(buckets, pending=1)
         attempt = uuid.uuid4().hex[:8]
-        aside = os.path.join(self.store_dir, f"_aside_b{batch_id}_{attempt}")
-        # repartition by bucket first: ONE file per touched bucket per
-        # batch, not one per task × bucket pair (a small-file explosion
-        # that makes later admission scans open hundreds of fragments)
-        rows.select(*cols, "bucket").repartition("bucket").write.partitionBy(
-            "bucket"
-        ).mode("overwrite").parquet(aside)
-        n = self._footer_rows(aside)
+        aside = self._write_aside(rows.select(*cols, "bucket"), merge, f"b{batch_id}_{attempt}")
+        n = self._footer_rows(os.path.join(aside, "bucket=*")) - sum(
+            pq.read_metadata(f).num_rows for files in merge.values() for f in files
+        )
         if n == 0:
-            # nothing to publish; a crash here leaves only the aside,
-            # which the next construction sweeps
+            # nothing to publish (so nothing compacted); a crash here
+            # leaves only the aside, which the next construction sweeps
             shutil.rmtree(aside)
             return 0
-        # Spark leaves a _SUCCESS marker; recursiveFileLookup would try
-        # to read it as parquet — drop it before publish
-        for marker in glob.glob(os.path.join(aside, "_*")):
-            os.remove(marker)
-        dest = delta_name if delta_name is not None else f"d_b{batch_id}_{attempt}"
         try:
-            os.rename(aside, os.path.join(self.store_dir, dest))
+            self._rename_in(aside, delta_name or f"d_b{batch_id}_{attempt}", merge)
         except OSError:
             if delta_name is None or not self.delta_exists(delta_name):
                 raise
@@ -161,49 +159,67 @@ class BucketedDeltaStore:
             shutil.rmtree(aside, ignore_errors=True)
         return n
 
+    def maybe_compact(self, buckets: list[int]) -> None:
+        """Compaction alone, for the sinks whose deterministic delta
+        name must not absorb older rows: merge each of ``buckets`` whose
+        files reach ``compact_threshold`` into one ``d_compact_*``."""
+        merge = self._due(buckets, pending=0)
+        if merge:
+            token = uuid.uuid4().hex[:8]
+            aside = self._write_aside(None, merge, f"compact_{token}")
+            self._rename_in(aside, f"d_compact_{token}", merge)
+
     @staticmethod
-    def _footer_rows(delta_dir: str) -> int:
-        """Rows under one delta dir, from its parquet footers."""
+    def _footer_rows(bucket_dirs: str) -> int:
+        """Rows in the parquet files under a bucket-dir glob, from
+        their footers."""
         return sum(
-            pq.read_metadata(f).num_rows
-            for f in glob.glob(os.path.join(delta_dir, "bucket=*", "*.parquet"))
+            pq.read_metadata(f).num_rows for f in glob.glob(os.path.join(bucket_dirs, "*.parquet"))
         )
 
-    def maybe_compact(self, buckets: list[int]) -> None:
-        """Distributed per-bucket compaction: once a bucket's rows are
-        spread over ``compact_threshold`` delta files, merge them into
-        one — this bounds the admission join's file opens over a
-        long-running ingest (see module docstring for the protocol)."""
-        to_merge: dict[int, list[str]] = {}
-        for b in buckets:
+    def _due(self, buckets: list[int], pending: int) -> dict[int, list[str]]:
+        """bucket -> its files, for each of ``buckets`` whose files,
+        plus ``pending`` about to be written, reach the threshold."""
+        due = {}
+        for b in sorted(buckets):
             files = sorted(
                 glob.glob(os.path.join(self.store_dir, "d_*", f"bucket={b}", "*.parquet"))
             )
-            if len(files) >= self.compact_threshold:
-                to_merge[b] = files
-        if not to_merge:
-            return
-        merged = None
-        for b, files in sorted(to_merge.items()):
+            if files and len(files) + pending >= self.compact_threshold:
+                due[b] = files
+        return due
+
+    def _write_aside(self, rows: DataFrame | None, merge: dict[int, list[str]], tag: str) -> str:
+        """Write ``rows`` plus every row of the files in ``merge``
+        (tagged with their bucket) to a new aside dir; returns it."""
+        for b, files in merge.items():
             part = (
                 self.spark.read.schema(self.schema)
                 .parquet(*files)
                 .withColumn("bucket", F.lit(b).cast("int"))
             )
-            merged = part if merged is None else merged.unionByName(part)
-        token = uuid.uuid4().hex[:8]
-        aside = os.path.join(self.store_dir, f"_aside_compact_{token}")
-        merged.repartition("bucket").write.partitionBy("bucket").mode(
-            "overwrite"
-        ).parquet(aside)
+            rows = part if rows is None else rows.unionByName(part)
+        aside = os.path.join(self.store_dir, f"_aside_{tag}")
+        # repartition by bucket first: ONE file per touched bucket per
+        # write, not one per task × bucket pair (a small-file explosion
+        # that makes later admission scans open hundreds of fragments)
+        rows.repartition("bucket").write.partitionBy("bucket").mode("overwrite").parquet(aside)
+        return aside
+
+    def _rename_in(self, aside: str, dest: str, merge: dict[int, list[str]]) -> None:
+        """Publish ``aside`` as delta ``dest``, then delete the files it
+        merged and prune the dirs they drained."""
+        # Spark leaves a _SUCCESS marker; recursiveFileLookup would try
+        # to read it as parquet — drop it before publish
         for marker in glob.glob(os.path.join(aside, "_*")):
             os.remove(marker)
-        os.replace(aside, os.path.join(self.store_dir, f"d_compact_{token}"))
-        for b, files in sorted(to_merge.items()):
+        os.rename(aside, os.path.join(self.store_dir, dest))
+        for files in merge.values():
             for f in files:
                 remove_with_checksum(f)
-            self.n_compactions += 1
-        self.prune_empty_dirs()
+        if merge:
+            self.n_compactions += len(merge)
+            self.prune_empty_dirs()
 
     def prune_empty_dirs(self) -> None:
         """Remove bucket/delta directories DRAINED by compaction —
@@ -295,10 +311,8 @@ class AdmissionSink:
 
     def _admit(self, rows: DataFrame, batch_id: int, buckets: list[int]) -> None:
         """Publish the admitted rows as one delta (one evaluation of the
-        admission plan: the write), record the batch, then compact the
-        buckets it touched (only those can have grown)."""
+        admission plan: the write), compacting the probed buckets in the
+        same write (only those can grow), and record the batch."""
         rows = rows.select(*self._cols, self._bucket_of(self._key()).alias("bucket"))
-        n = self.store.publish(rows, self._cols, batch_id) // self.rows_per_doc
-        self.admitted_batches.append((batch_id, n))
-        if n:
-            self.store.maybe_compact(buckets)
+        n = self.store.publish(rows, self._cols, batch_id, buckets=buckets)
+        self.admitted_batches.append((batch_id, n // self.rows_per_doc))

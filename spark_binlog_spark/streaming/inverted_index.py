@@ -132,18 +132,18 @@ class InvertedIndexSink:
             .persist()
         )
         try:
-            buckets = sorted(
-                r[0] for r in post.select("bucket").distinct().collect()
-            )
+            # the touched buckets and the batch's totals in one collect
+            # off the cached postings (a doc's words sum to its dl)
+            tot = post.agg(
+                F.sort_array(F.collect_set("bucket")).alias("buckets"),
+                F.countDistinct("doc_id").cast("long").alias("n_docs"),
+                F.sum("tf").cast("long").alias("total_words"),
+            ).collect()[0]
             # postings first (publish-if-absent: a crash-replay whose
             # delta already landed skips straight to the marker, and
             # gets that delta's row count back) ...
             n = self.store.publish(post, POSTING_COLS, batch_id, delta_name=f"d_b{batch_id}")
             # ... then the totals marker = the durable applied record
-            tot = dl.agg(
-                F.count("*").cast("long").alias("n_docs"),
-                F.sum("dl").cast("long").alias("total_words"),
-            ).collect()[0]
             import pyarrow as pa
             import pyarrow.parquet as pq
 
@@ -161,7 +161,7 @@ class InvertedIndexSink:
             self.applied_batches.append((batch_id, n))
             # compaction only AFTER the marker: it destroys the
             # deterministic delta name the replay check relies on
-            self.store.maybe_compact(buckets)
+            self.store.maybe_compact(tot["buckets"])
         finally:
             post.unpersist()
 

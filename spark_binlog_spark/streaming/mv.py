@@ -42,6 +42,7 @@ from pyspark.sql.types import (
 )
 
 from spark_binlog_spark.operators import cdc_apply, latest_image
+from spark_binlog_spark.streaming.store import last_batch_id
 from spark_binlog_spark.streaming.swap import recover_dir, safe_swap
 
 DEC = "decimal(18,2)"
@@ -114,15 +115,6 @@ class IncrementalAggSink:
             .select(self.group_col, "n_rows", "total")
         )
 
-    def _last_batch_id(self) -> int:
-        row = (
-            self.spark.read.schema(self._agg_schema)
-            .parquet(self.agg_dir)
-            .agg(F.max("batch_id"))
-            .collect()[0]
-        )
-        return row[0] if row[0] is not None else -1
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         g, v, k = self.group_col, self.val_col, self.key_col
         batch_df = batch_df.persist()
@@ -133,7 +125,7 @@ class IncrementalAggSink:
         state = self.current()
         latest = F.broadcast(latest_image(batch_df, ["pk"]).select("pk", "op", "value"))
 
-        if batch_id > self._last_batch_id():
+        if batch_id > last_batch_id(self.agg_dir):
             # old values for the touched keys only.  Two broadcast-able
             # steps (a right-outer against a broadcast build side would
             # be unsupported and silently shuffle the full state):

@@ -137,16 +137,13 @@ class NearDupIngestSink(AdmissionSink):
                 ic.join(bc, ["cid", "u", "v"])
                 .where(f"{n_agree} >= {self.min_agree}")
                 .selectExpr("b_doc AS doc_id")
-                .distinct()
             )
-            inb_reject = (
-                minhash_pairs_from_wide(wide, n_hashes=n, min_agree=self.min_agree)
-                .selectExpr("doc_b AS doc_id")
-                .distinct()
-            )
-            admitted = sig.join(idx_reject, "doc_id", "left_anti").join(
-                inb_reject, "doc_id", "left_anti"
-            )
+            inb_reject = minhash_pairs_from_wide(
+                wide, n_hashes=n, min_agree=self.min_agree
+            ).selectExpr("doc_b AS doc_id")
+            # one anti-join, no distinct: a left-anti join's output does
+            # not depend on duplicates on its right side
+            admitted = sig.join(idx_reject.unionByName(inb_reject), "doc_id", "left_anti")
             self._admit(admitted, batch_id, buckets)
         finally:
             wide.unpersist()

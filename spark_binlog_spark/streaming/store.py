@@ -6,8 +6,8 @@ that identify a row (``keys``) and how rows merge (``merge``), and
 implements ``_delta(batch_df, batch_id)``; it keeps its own serving
 methods.  The four merge kinds:
 
-- ``sum``: full-outer join on ``keys``, value columns add;
-- ``max``: the same join, value columns take the larger;
+- ``sum``/``max``: one ``groupBy(keys)`` over store ∪ delta that sums
+  or maxes the value columns (a NULL key is one group like any other);
 - ``bottom-k``: union, then per ``keys[0]`` group the ``k`` smallest
   distinct rows by ``order`` (the same row, e.g. a term hash, can
   arrive in two batches; store and delta hold at most ``2k`` rows per
@@ -21,7 +21,9 @@ not above ``max(batch_id)`` is a replay (a crash between the swap and
 the checkpoint commit) and is skipped.  This is the reference's
 monotonic offset guard (OriginalSourceServerInExecutor.scala:164-171);
 the idempotent merges keep it too, so every store has the same replay
-contract and a replay costs one small aggregate instead of a merge.
+contract.  The ratchet is read from the store files' parquet footers
+(``last_batch_id``: the max of the ``batch_id`` column statistics, -1
+for a store with no rows), driver metadata with no Spark job.
 Each batch writes the merged store to ``<dir>.b<batch_id>`` and swaps it
 in with ``safe_swap``; ``recover_dir`` repairs any crash point when the
 store is opened again.
@@ -29,12 +31,31 @@ store is opened again.
 
 from __future__ import annotations
 
+import glob
+import os
+
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from spark_binlog_spark.streaming.swap import recover_dir, safe_swap
+
+
+def last_batch_id(path: str) -> int:
+    """The largest ``batch_id`` in the parquet store at ``path``, from
+    its files' column statistics (-1 when it holds no rows).  Spark
+    writes min/max for every bigint column chunk: one without is an
+    error, not a reason to scan."""
+    stats = [
+        md.row_group(g).column(md.schema.names.index("batch_id")).statistics
+        for md in map(pq.read_metadata, glob.glob(os.path.join(path, "*.parquet")))
+        for g in range(md.num_row_groups)
+    ]
+    if not all(st is not None and st.has_min_max for st in stats):
+        raise ValueError(f"{path}: a batch_id column chunk has no min/max statistics")
+    return max((st.max for st in stats), default=-1)
 
 
 class MergeableStore:
@@ -77,8 +98,7 @@ class MergeableStore:
         return self.spark.read.schema(self._schema).parquet(self.stats_dir)
 
     def _last_batch_id(self) -> int:
-        row = self._stats().agg(F.max("batch_id")).collect()[0]
-        return row[0] if row[0] is not None else -1
+        return last_batch_id(self.stats_dir)
 
     def _delta(self, batch_df: DataFrame, batch_id: int) -> DataFrame | None:
         """The batch's summary, in the store's columns; None skips the
@@ -86,21 +106,13 @@ class MergeableStore:
         raise NotImplementedError
 
     def _merged(self, delta: DataFrame) -> DataFrame:
-        old = self._stats().select(*self._cols)
+        both = self._stats().select(*self._cols).unionByName(delta.select(*self._cols))
         if self.merge in ("sum", "max"):
-            values = [c for c in self._cols if c not in self.keys]
-            d = delta.select(*self.keys, *[F.col(c).alias(f"d_{c}") for c in values])
-            fold = (lambda a, b: a + b) if self.merge == "sum" else F.greatest
-            return old.join(d, list(self.keys), "full_outer").select(
-                *self.keys,
-                *[
-                    fold(
-                        F.coalesce(F.col(c), F.lit(0)), F.coalesce(F.col(f"d_{c}"), F.lit(0))
-                    ).cast("long").alias(c)
-                    for c in values
-                ],
+            fold = F.sum if self.merge == "sum" else F.max
+            return both.groupBy(*self.keys).agg(
+                *[fold(c).cast("long").alias(c) for c in self._cols if c not in self.keys]
             )
-        both = old.unionByName(delta.select(*self._cols)).distinct()
+        both = both.distinct()
         if self.merge == "distinct-union":
             return both
         w = Window.partitionBy(self.keys[0]).orderBy(*self.order)

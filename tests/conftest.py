@@ -106,3 +106,29 @@ class _RoundTrips:
             return real(conn, *args, **kwargs)
 
         monkeypatch.setattr(ClientServerConnection, "send_command", send_command)
+
+
+class _Jobs:
+    """Counts the Spark jobs started inside ``with _Jobs(spark) as
+    jobs:``: the block runs in its own job group, and ``n`` is the
+    number of job ids the status tracker holds for that group."""
+
+    _groups = 0
+
+    def __init__(self, spark):
+        self.sc = spark.sparkContext
+        _Jobs._groups += 1
+        self.group = f"job-budget-{_Jobs._groups}"
+
+    def __enter__(self):
+        self.sc.setJobGroup(self.group, self.group)
+        return self
+
+    def __exit__(self, *exc):
+        self.sc._jsc.clearJobGroup()
+
+    @property
+    def n(self) -> int:
+        # job starts reach the status store through the listener bus
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(self.sc.statusTracker().getJobIdsForGroup(self.group))

@@ -1468,6 +1468,62 @@ class TestFullPipeline:
         assert got == expected
 
 
+def _crash_every_commit_step(spark, tmp_path, monkeypatch, make, texts):
+    """For k = 1, 2, ...: copy a store holding batch 0, crash batch 1's
+    commit at its k-th filesystem step, open a fresh sink on the copy,
+    replay batch 1 and feed batch 2; the accepted set must equal the
+    no-crash run's, with no aside left.  Batch 1 repeats document 0 and
+    batch 2 document 2.  Returns the sink of the first uncrashed commit
+    and that k."""
+    import glob
+    import shutil
+
+    from tests.conftest import _CrashAt
+
+    def batch(ids, dup=None):
+        rows = [(i, texts[i]) for i in ids] + ([(100, texts[dup])] if dup is not None else [])
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    b0, b1, b2 = batch([0, 1]), batch([2, 3], dup=0), batch([4], dup=2)
+
+    def accepted(sink):
+        return sorted(map(tuple, sink.accepted().collect()))
+
+    ref = make(str(tmp_path / "ref"))
+    for bid, b in enumerate([b0, b1, b2]):
+        ref(b, bid)
+    want = accepted(ref)
+    assert [r[0] for r in want] == [0, 1, 2, 3, 4]
+    seed = str(tmp_path / "seed")
+    make(seed)(b0, 0)
+    crash = _CrashAt(
+        monkeypatch,
+        [(shutil, "move"), (shutil, "rmtree"), (os, "rename"), (os, "replace"), (os, "remove")],
+    )
+    step = 0
+    while True:
+        step += 1
+        assert step <= 16, "a batch commit should take a handful of filesystem steps"
+        path = str(tmp_path / f"step{step}")
+        shutil.copytree(seed, path)
+        sink = make(path)
+        crash.reset(step)
+        crash.armed = True
+        try:
+            sink(b1, 1)
+        except OSError:
+            pass
+        finally:
+            crash.armed = False
+        if not crash.fired:
+            return sink, step
+        resumed = make(path)  # restart: sweep, then replay batch 1
+        resumed(b1, 1)
+        resumed(b2, 2)
+        assert accepted(resumed) == want, f"crash at commit step {step}"
+        assert not glob.glob(os.path.join(path, "_aside*")), f"step {step}"
+
+
 class TestDedupIngestSink:
     def test_streaming_dedup_admits_first_copies_and_replays_idempotently(
         self, spark, tmp_path
@@ -1605,18 +1661,15 @@ class TestDedupIngestSink:
 
     def test_crash_at_every_commit_step_converges(self, spark, tmp_path, monkeypatch):
         """For k = 1, 2, ...: crash batch 1's commit at its k-th
-        filesystem step (publish rename, compaction rename, file
-        deletes, directory prunes), open a fresh sink on the same
-        directory, replay batch 1 and feed batch 2; the accepted set
-        must equal the no-crash run's.  With 2 buckets and a threshold
-        of 2, batch 1's commit publishes, compacts and prunes.  The
-        loop ends at the first k the commit no longer reaches."""
-        import glob
+        filesystem step (publish rename, merged-file deletes, directory
+        prunes), open a fresh sink on the same directory, replay batch 1
+        and feed batch 2; the accepted set must equal the no-crash
+        run's.  With 2 buckets and a threshold of 2, batch 1's publish
+        also compacts its bucket.  The loop ends at the first k the
+        commit no longer reaches."""
         import hashlib
-        import shutil
 
         from spark_binlog_spark.streaming.dedup_sink import DedupIngestSink
-        from tests.conftest import _CrashAt
 
         # fp48 is the first 12 hex digits of the text's md5: keep every
         # document in bucket 0, so the commit takes few steps
@@ -1625,53 +1678,34 @@ class TestDedupIngestSink:
             if int(hashlib.md5(t.encode()).hexdigest()[:12], 16) % 2 == 0
         ]
 
-        def batch(ids, dup=None):
-            rows = [(i, texts[i]) for i in ids] + ([(100, texts[dup])] if dup is not None else [])
-            return spark.createDataFrame(rows, "doc_id long, text string")
-
-        b0, b1, b2 = batch([0, 1]), batch([2, 3], dup=0), batch([4], dup=2)
-
         def make(path):
             return DedupIngestSink(spark, path, n_buckets=2, compact_threshold=2)
 
-        def accepted(sink):
-            return sorted(map(tuple, sink.accepted().collect()))
-
-        ref = make(str(tmp_path / "ref"))
-        for bid, b in enumerate([b0, b1, b2]):
-            ref(b, bid)
-        want = accepted(ref)
-        assert [r[0] for r in want] == [0, 1, 2, 3, 4]
-        seed = str(tmp_path / "seed")
-        make(seed)(b0, 0)
-        crash = _CrashAt(
-            monkeypatch,
-            [(shutil, "move"), (shutil, "rmtree"), (os, "rename"), (os, "replace"), (os, "remove")],
-        )
-        step = 0
-        while True:
-            step += 1
-            assert step <= 16, "a batch commit should take a handful of filesystem steps"
-            path = str(tmp_path / f"step{step}")
-            shutil.copytree(seed, path)
-            sink = make(path)
-            crash.reset(step)
-            crash.armed = True
-            try:
-                sink(b1, 1)
-            except OSError:
-                pass
-            finally:
-                crash.armed = False
-            if not crash.fired:
-                break
-            resumed = make(path)  # restart: sweep, then replay batch 1
-            resumed(b1, 1)
-            resumed(b2, 2)
-            assert accepted(resumed) == want, f"crash at commit step {step}"
-            assert not glob.glob(os.path.join(path, "_aside*")), f"step {step}"
+        sink, step = _crash_every_commit_step(spark, tmp_path, monkeypatch, make, texts)
         assert sink.n_compactions == 1
         assert step > 6, "expected publish, compaction and prune steps"
+
+    def test_crash_at_every_commit_step_of_a_folded_neardup_batch(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The same crash matrix over ``NearDupIngestSink``, whose rows
+        spread over both buckets: batch 1's publish folds both buckets'
+        files into its write, then deletes them and prunes their dirs.
+        A crash at the rename, at any delete or at any prune must
+        converge after a replay."""
+        from spark_binlog_spark.streaming.neardup_sink import NearDupIngestSink
+
+        texts = [
+            f"crash matrix doc {i} " + " ".join(f"w{i * 31 + t}" for t in range(12))
+            for i in range(5)
+        ]
+
+        def make(path):
+            return NearDupIngestSink(spark, path, min_agree=2, n_buckets=2, compact_threshold=2)
+
+        sink, step = _crash_every_commit_step(spark, tmp_path, monkeypatch, make, texts)
+        assert sink.n_compactions == 2
+        assert step > 8, "expected publish, two buckets' deletes and prune steps"
 
     def test_crash_removing_an_empty_aside_converges(self, spark, tmp_path, monkeypatch):
         """A replayed batch admits nothing: its write is empty and the
@@ -2642,6 +2676,59 @@ class TestDistributedCompaction:
         assert sink2.accepted().count() == sink2.admitted_rows
 
 
+class TestWarmBatchJobBudget:
+    """Spark jobs per warm batch, counted through the status tracker.
+    Under AQE every shuffle stage of a small batch runs as its own job
+    at a fixed cost, so a side job costs about as much as admission
+    work.  The admission stores compact inside the publish write
+    (2 buckets at threshold 2 compact in every warm batch), NearDup
+    rejects in one anti-join, and the summary store reads its batch-id
+    ratchet from parquet footers and merges sums in one aggregate."""
+
+    @pytest.mark.parametrize(
+        "name,budget", [("dedup", 8), ("neardup", 11), ("corpus_stats", 5)]
+    )
+    def test_jobs_per_warm_batch(self, spark, tmp_path, name, budget):
+        from spark_binlog_spark.streaming.corpus_stats import CorpusStatsSink
+        from spark_binlog_spark.streaming.dedup_sink import DedupIngestSink
+        from spark_binlog_spark.streaming.neardup_sink import NearDupIngestSink
+        from tests.conftest import _Jobs
+
+        store = str(tmp_path / "store")
+        sink = {
+            "dedup": lambda: DedupIngestSink(spark, store, n_buckets=2, compact_threshold=2),
+            "neardup": lambda: NearDupIngestSink(
+                spark, store, min_agree=2, n_buckets=2, compact_threshold=2
+            ),
+            "corpus_stats": lambda: CorpusStatsSink(spark, store, resume=False),
+        }[name]()
+
+        def text(b, i):
+            return f"doc {i} of batch {b} " + " ".join(f"w{b * 97 + i * 13 + t}" for t in range(10))
+
+        def batch(b):
+            # each batch repeats one document of the one before it
+            rows = [(b * 100 + i, text(b, i), f"s{i % 3}") for i in range(1, 20)]
+            return spark.createDataFrame(
+                rows + [(b * 100, text(b - 1, 1), "s0")],
+                "doc_id long, text string, source string",
+            ).persist()
+
+        batches = [batch(b) for b in range(3)]
+        try:
+            sink(batches[0], 0)
+            sink(batches[1], 1)
+            with _Jobs(spark) as jobs:
+                sink(batches[2], 2)
+            if name != "corpus_stats":
+                assert sink.admitted_batches[2][1] > 0
+                assert sink.n_compactions >= 2  # both warm batches compacted
+            assert jobs.n <= budget, f"{name}: {jobs.n} Spark jobs for one warm batch"
+        finally:
+            for b in batches:
+                b.unpersist()
+
+
 class TestRegionPartitionedStore:
     def test_pruned_scan_and_identical_stream(self, spark, tmp_path):
         """A region-partitioned store must (a) let a region task open
@@ -3233,6 +3320,22 @@ class TestCorpusStatsSink:
         # mixture derives the flattening rate from the live stats
         mix = {r["source"]: r["sample_rate4"] for r in sink.mixture().collect()}
         assert mix == {"s0": 2 * 10000 // 7, "s1": 10000}
+
+    def test_null_key_merges_into_one_row(self, spark, tmp_path):
+        """A NULL ``source`` in two batches is one group, as in a batch
+        ``groupBy``: the store keeps one row per (source, len_bin), the
+        NULL key included."""
+        from spark_binlog_spark.streaming.corpus_stats import CorpusStatsSink
+
+        sink = CorpusStatsSink(spark, str(tmp_path / "stats"), resume=False)
+        schema = "doc_id long, text string, source string"
+        sink(spark.createDataFrame([(0, "a b", None), (1, "c d", "s0")], schema), 0)
+        sink(spark.createDataFrame([(2, "e f", None)], schema), 1)
+        rows = sorted(
+            (r["source"] or "", r["len_bin"], r["n_docs"], r["n_tokens"])
+            for r in sink._stats().collect()
+        )
+        assert rows == [("", 1, 2, 4), ("s0", 1, 1, 2)]
 
     def test_drift_matches_reference_and_survives_replay(self, spark, tmp_path):
         """drift() = exact integer L1 distance between the last batch's
